@@ -25,18 +25,21 @@ This re-expresses the reference pipeline's data plane as Spark algebra:
 Scale notes (100 TB): the merge is ONE shuffle on the PK — both sides
 hash-partition on ``pk`` and AQE converts to broadcast when the delta is
 small (the common CDC case) or splits skewed partitions. Attribution
-counts are computed from the same joined plan rather than the
-reference's before/after ``COUNT(*)`` arithmetic
-(`/root/reference/scripts/03_cdc_etl.py:168-169`), which double-counts
-dropped soft-deletes as updates (SURVEY.md §7 risk 2) and would cost two
-extra full-table scans at scale.
+counts and the batch's max change time are observed on the merge join
+by the one action that writes it, not by the reference's before/after
+``COUNT(*)`` arithmetic and ``MAX(GREATEST(...))`` query
+(reference `scripts/03_cdc_etl.py:168-169,325-329`): three extra
+scans, and the counts double-count dropped soft-deletes as updates
+(SURVEY.md §7 risk 2).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime
 
-from pyspark.sql import Column, DataFrame, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 CREATED = "created_at"
@@ -124,6 +127,8 @@ class MergeStats:
     updated: int
     inserted: int
     dropped_deletes: int
+    # gated soft-deletes included; None for a delta without CDC columns
+    max_change_ts: datetime | None = None
 
     @property
     def staged(self) -> int:
@@ -132,29 +137,44 @@ class MergeStats:
 
 @dataclass
 class MergeResult:
+    """``df`` is the merged table. Its plan observes the merge join
+    below the insert gate, so the first action that runs ``df`` in full
+    (the target write) also fills ``observation``."""
+
     df: DataFrame
-    _stats_df: DataFrame  # one-row frame: u / i / x counts
-    pk: list[str]
-    _shared: DataFrame | None = None  # join subtree common to df and stats
+    observation: Observation
 
     def stats(self) -> MergeStats:
-        """One aggregate pass over the strategy's joined plan."""
-        row = self._stats_df.collect()[0]
-        return MergeStats(updated=row["u"] or 0, inserted=row["i"] or 0, dropped_deletes=row["x"] or 0)
+        """What the first action over ``df`` observed; if none has run,
+        runs ``df`` into the no-op sink rather than wait forever. A
+        partial first action (``take``, ``show``, ``isEmpty``) leaves
+        partial counts: run ``df`` in full first."""
+        done = self.observation._jo.future().isCompleted
+        if not done():
+            # an action's fill is posted on the listener bus after the
+            # action returns: drain it before deciding none has run
+            try:
+                self.df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            except Py4JJavaError:  # timeout on a backlogged bus
+                pass
+            if not done():
+                self.df.write.mode("overwrite").format("noop").save()
+        m = self.observation.get
+        return MergeStats(updated=m["u"], inserted=m["i"], dropped_deletes=m["x"],
+                          max_change_ts=m.get("max_ts"))
 
-    def persist_shared(self) -> "MergeResult":
-        """Persist the join subtree that both ``df`` and ``stats()``
-        consume, so running stats + writing the output executes the
-        merge join ONCE instead of twice (at scale the join dominates;
-        callers that need both actions should wrap them in
-        persist_shared()/unpersist_shared())."""
-        if self._shared is not None:
-            self._shared.persist()
-        return self
 
-    def unpersist_shared(self) -> None:
-        if self._shared is not None:
-            self._shared.unpersist()
+def _attribution(t_present: Column, d_present: Column, deleted: Column,
+                 change_ts: Column | None = None) -> list[Column]:
+    """Aggregates over a merge join: delta rows that update a target
+    row, insert, or are dropped by the insert gate (a soft-delete of a
+    key the target never saw), and the delta's max change time."""
+    new = d_present & ~t_present
+    return [
+        F.count_if(d_present & t_present).alias("u"),
+        F.count_if(new & (deleted == "N")).alias("i"),
+        F.count_if(new & (deleted == "Y")).alias("x"),
+    ] + ([] if change_ts is None else [F.max(change_ts).alias("max_ts")])
 
 
 def _align_schemas(target: DataFrame, delta: DataFrame) -> tuple[DataFrame, DataFrame, list[str]]:
@@ -193,10 +213,9 @@ def _align_schemas(target: DataFrame, delta: DataFrame) -> tuple[DataFrame, Data
 
 def _merge_broadcast_delta(
     target: DataFrame, delta: DataFrame, pk: list[str], deleted_col: str,
-    backfilled: list[str] | None = None,
+    backfilled: list[str], change_ts: Column | None,
 ) -> MergeResult:
     """No-target-shuffle merge: see ``merge_soft_delete`` docstring."""
-    backfilled = backfilled or []
     out_cols = target.columns
     keys = delta.select(*pk)
     # target-side passes: broadcast the (small) delta keys
@@ -212,6 +231,8 @@ def _merge_broadcast_delta(
         F.broadcast(matched_keys.withColumn("__m__", F.lit(1))), pk, "left"
     )
     matched = F.col("__m__").isNotNull()
+    obs = Observation()  # below the insert gate: gated soft-deletes count
+    d_flagged = d_flagged.observe(obs, *_attribution(matched, F.lit(True), F.col(deleted_col), change_ts))
     kept = d_flagged.filter(
         matched | (F.col(deleted_col) == "N")
     ).select(
@@ -223,12 +244,7 @@ def _merge_broadcast_delta(
         ]
     )
     merged = untouched.select(*out_cols).unionByName(kept)
-    stats_df = d_flagged.agg(
-        F.sum(F.when(matched, 1).otherwise(0)).alias("u"),
-        F.sum(F.when(~matched & (F.col(deleted_col) == "N"), 1).otherwise(0)).alias("i"),
-        F.sum(F.when(~matched & (F.col(deleted_col) == "Y"), 1).otherwise(0)).alias("x"),
-    )
-    return MergeResult(df=merged, _stats_df=stats_df, pk=pk, _shared=d_flagged)
+    return MergeResult(df=merged, observation=obs)
 
 
 def merge_attribution(target: DataFrame, delta: DataFrame, pk: list[str],
@@ -239,25 +255,22 @@ def merge_attribution(target: DataFrame, delta: DataFrame, pk: list[str],
     ``COUNT(*)`` arithmetic (`/root/reference/scripts/03_cdc_etl.py:122-127,168-169`)
     which costs two extra full scans and misattributes dropped
     soft-deletes as updates (SURVEY.md §7 risk 2)."""
-    k = pk[0]
+    return _tagged_join(target, delta, pk).agg(*_attribution(
+        F.col(f"__t_{pk[0]}__").isNotNull(), F.col(f"__d_{pk[0]}__").isNotNull(),
+        F.col(f"__d_{deleted_col}__"),
+    )).toDF("updated_count", "inserted_count", "dropped_count")
+
+
+def _tagged_join(target: DataFrame, delta: DataFrame, pk: list[str]) -> DataFrame:
+    """Full-outer join on ``pk``, every column tagged ``__t_c__`` /
+    ``__d_c__`` so the joined plan keeps unambiguous references."""
     t = target.select([F.col(c).alias(f"__t_{c}__") for c in target.columns])
     d = delta.select([F.col(c).alias(f"__d_{c}__") for c in delta.columns])
     cond = None
-    for key in pk:
-        clause = F.col(f"__t_{key}__") == F.col(f"__d_{key}__")
+    for k in pk:
+        clause = F.col(f"__t_{k}__") == F.col(f"__d_{k}__")
         cond = clause if cond is None else (cond & clause)
-    joined = t.join(d, cond, "full_outer")
-    t_present = F.col(f"__t_{k}__").isNotNull()
-    d_present = F.col(f"__d_{k}__").isNotNull()
-    return joined.agg(
-        F.coalesce(F.sum(F.when(t_present & d_present, 1).otherwise(0)), F.lit(0)).alias("updated_count"),
-        F.coalesce(
-            F.sum(F.when(~t_present & (F.col(f"__d_{deleted_col}__") == "N"), 1).otherwise(0)), F.lit(0)
-        ).alias("inserted_count"),
-        F.coalesce(
-            F.sum(F.when(~t_present & (F.col(f"__d_{deleted_col}__") == "Y"), 1).otherwise(0)), F.lit(0)
-        ).alias("dropped_count"),
-    )
+    return t.join(d, cond, "full_outer")
 
 
 def merge_soft_delete(
@@ -300,6 +313,9 @@ def merge_soft_delete(
     ``dedup_delta=True`` collapses multi-change batches via
     ``latest_per_key`` first. Column order of the output = target
     column order.
+
+    Both strategies observe the join below the insert gate, so the
+    write of ``df`` also fills the u/i/x counts and max change time.
     """
     if not pk:
         raise ValueError("merge requires a non-empty primary key")
@@ -308,21 +324,20 @@ def merge_soft_delete(
     if dedup_delta:
         delta = latest_per_key(delta, pk, created=created, updated=updated)
     target, delta, backfilled = _align_schemas(target, delta)
+    # the merge also serves frames without CDC columns (snapshots, qids)
+    has_ts = {created.lower(), updated.lower()} <= {c.lower() for c in delta.columns}
     if strategy == "broadcast_delta":
-        return _merge_broadcast_delta(target, delta, pk, deleted_col, backfilled)
+        change_ts = change_ts_col(created, updated) if has_ts else None
+        return _merge_broadcast_delta(target, delta, pk, deleted_col, backfilled, change_ts)
 
     out_cols = target.columns
-    # Tag both sides so the joined plan keeps unambiguous references.
-    t = target.select([F.col(c).alias(f"__t_{c}__") for c in target.columns])
-    d = delta.select([F.col(c).alias(f"__d_{c}__") for c in delta.columns])
-    cond = None
-    for k in pk:
-        clause = F.col(f"__t_{k}__") == F.col(f"__d_{k}__")
-        cond = clause if cond is None else (cond & clause)
-    joined = t.join(d, cond, "full_outer")
-
+    joined = _tagged_join(target, delta, pk)
     d_present = F.col(f"__d_{pk[0]}__").isNotNull()
     t_present = F.col(f"__t_{pk[0]}__").isNotNull()
+    change_ts = change_ts_col(f"__d_{created}__", f"__d_{updated}__") if has_ts else None
+    obs = Observation()  # below the insert gate: gated soft-deletes count
+    joined = joined.observe(
+        obs, *_attribution(t_present, d_present, F.col(f"__d_{deleted_col}__"), change_ts))
     resolved = joined.filter(
         t_present | (F.col(f"__d_{deleted_col}__") == "N")  # insert gate
     ).select(
@@ -335,13 +350,4 @@ def merge_soft_delete(
             for c in out_cols
         ]
     )
-    stats_df = joined.agg(
-        F.sum(F.when(d_present & t_present, 1).otherwise(0)).alias("u"),
-        F.sum(
-            F.when(d_present & ~t_present & (F.col(f"__d_{deleted_col}__") == "N"), 1).otherwise(0)
-        ).alias("i"),
-        F.sum(
-            F.when(d_present & ~t_present & (F.col(f"__d_{deleted_col}__") == "Y"), 1).otherwise(0)
-        ).alias("x"),
-    )
-    return MergeResult(df=resolved, _stats_df=stats_df, pk=pk, _shared=joined)
+    return MergeResult(df=resolved, observation=obs)

@@ -69,8 +69,8 @@ def scd2_apply(hist: DataFrame, delta: DataFrame, pk: list[str], ts_col: str) ->
     open_rows = hist.filter(F.col("is_current"))
     # localCheckpoint: the stale probe below and the returned plan both
     # consume this join — materialize it once instead of executing the
-    # open-slice join twice per microbatch (same double-execution class
-    # MergeResult.persist_shared solves for the CDC merge)
+    # open-slice join twice per microbatch (the CDC merge avoids the
+    # same double execution by observing its counts on the write)
     joined = open_rows.join(d, on, "left").localCheckpoint()
     stale = joined.filter(
         F.col("__d_ts").isNotNull() & (F.col("__d_ts") <= F.col("valid_from"))

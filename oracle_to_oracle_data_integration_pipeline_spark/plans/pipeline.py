@@ -16,10 +16,10 @@ stage to STG_ table + Oracle MERGE          → merge_soft_delete (one
                                               shuffle join; no staging
                                               copy — the DataFrame IS
                                               the stage)
-watermark = MAX(GREATEST(...)) recompute    → max(change_ts) from the
-                                              SAME cached delta (the
-                                              reference recomputes the
-                                              scan 3×; we read it once)
+COUNT(*) attribution; watermark =          → u/i/x and max(change_ts)
+MAX(GREATEST(...)) recompute                  observed on the merge join
+                                              by the target write (the
+                                              reference re-scans 3×)
 per-table try/except, summary, exit code    → RunReport with per-table
                                               error isolation
 
@@ -42,11 +42,9 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
 from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
-    change_ts_col,
     delta_predicate,
     latest_per_key,
     merge_soft_delete,
@@ -196,8 +194,8 @@ class CdcPipeline:
             last_ts = self.watermarks.get(table)
             pred = delta_predicate(last_ts)
             delta = src.filter(pred) if pred is not None else src
-            # One materialization, reused for emptiness gate, merge and
-            # watermark advance (the reference recomputes the scan 3×).
+            # One materialization, reused for the emptiness gate, the
+            # strategy count and the merge (the reference scans 3×).
             delta = delta.cache()
             try:
                 if delta.isEmpty():  # cheap gate, not a full count()
@@ -226,20 +224,14 @@ class CdcPipeline:
                     else:
                         strategy = self.merge_strategy
                     merged = merge_soft_delete(tgt, delta_clean, pk, strategy=strategy)
-                    # persist the shared join subtree so the stats pass
-                    # and the target write execute the merge join ONCE
-                    merged.persist_shared()
-                    try:
-                        stats = merged.stats()
-                        self.target.overwrite(table, merged.df)
-                    finally:
-                        merged.unpersist_shared()
+                    self.target.overwrite(table, merged.df)
 
-                # Watermark advance only after a successful write
-                # (at-least-once protocol, 03_cdc_etl.py:324-334).
-                max_ts = delta.agg(F.max(change_ts_col()).alias("m")).collect()[0]["m"]
-                if max_ts is not None:
-                    self.watermarks.upsert(table, max_ts)
+                # The write filled the merge observation. Watermark
+                # advance only after a successful write (at-least-once
+                # protocol, 03_cdc_etl.py:324-334).
+                stats = merged.stats()
+                if stats.max_change_ts is not None:
+                    self.watermarks.upsert(table, stats.max_change_ts)
                 return TableResult(
                     table,
                     "replicated",

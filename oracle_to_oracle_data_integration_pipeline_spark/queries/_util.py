@@ -17,6 +17,7 @@ compare stable (SURVEY.md §7 risk 6):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,17 +107,21 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # schema inference (~25 ms, round 11 profile: one per load() in every
 # query); the schema is pure file metadata, so it is memoized on the
 # file's identity stamp and passed explicitly. The stamp invalidates
-# on any rewrite; data is still read fresh from parquet every
-# execution — nothing about query RESULTS is cached here.
+# on any rewrite of a regular file; a directory's stamp does not move
+# when a part file inside is rewritten in place, so datasets are never
+# memoized. Data is still read fresh from parquet every execution —
+# nothing about query RESULTS is cached here.
 _SCHEMA_MEMO: dict = {}
 
 
 def _parquet_schema(spark: SparkSession, path: str):
     try:
         st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
         return spark.read.parquet(path).schema  # dirs/globs: no memo
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     hit = _SCHEMA_MEMO.get(key)
     if hit is None:
         hit = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema

@@ -193,7 +193,8 @@ class SnapshotStore:
         identical rows to the reference's Oracle MERGE, pinned by
         tests), commit the result as a new version. Readers of the old
         version are unaffected; the commit point is the pointer swap.
-        Returns (version, MergeResult stats)."""
+        Returns (version, MergeStats): the commit's data write fills
+        the merge observation, so the join runs once."""
         from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
             merge_soft_delete,
         )
@@ -202,7 +203,7 @@ class SnapshotStore:
             target = self.read(table)
             res = merge_soft_delete(target, delta, keys, strategy=strategy)
             version = self._commit_locked(res.df, table, operation="merge")
-            return version, res.stats()
+        return version, res.stats()
 
     def vacuum(self, table: str, keep_last: int = 2) -> list[int]:
         """Drop all but the newest ``keep_last`` versions (data +

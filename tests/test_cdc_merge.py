@@ -5,6 +5,7 @@ insert gate (`/root/reference/scripts/03_cdc_etl.py:145-157`)."""
 from __future__ import annotations
 
 import datetime
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -109,6 +110,44 @@ def test_mixed_batch_attribution(spark, target):
     # merge_attribution DataFrame agrees
     row = merge_attribution(target, delta, ["id"]).collect()[0]
     assert (row["updated_count"], row["inserted_count"], row["dropped_count"]) == (2, 1, 1)
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "broadcast_delta"])
+def test_observed_max_change_ts_counts_gated_deletes(spark, target, strategy):
+    """The max change time is observed below the insert gate: the
+    dropped soft-delete at T3 is the batch's newest change."""
+    delta = mk(spark, [(1, "a2", T1, T2, "N"), (98, "x", T2, T3, "Y")])
+    res = merge_soft_delete(target, delta, ["id"], strategy=strategy)
+    assert 98 not in as_map(res.df)
+    s = res.stats()
+    assert (s.updated, s.inserted, s.dropped_deletes, s.max_change_ts) == (1, 0, 1, T3)
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "broadcast_delta"])
+def test_merge_without_cdc_columns(spark, strategy):
+    """Snapshot and stream callers merge frames with no created/updated
+    columns: the counts are observed, the max change time is None."""
+    schema = "id long, val string, is_deleted string"
+    tgt = spark.createDataFrame([(1, "a", "N"), (2, "b", "N")], schema)
+    delta = spark.createDataFrame([(2, "b2", "N"), (3, "c", "N"), (4, "d", "Y")], schema)
+    res = merge_soft_delete(tgt, delta, ["id"], strategy=strategy)
+    assert as_map(res.df) == {1: ("a", "N"), 2: ("b2", "N"), 3: ("c", "N")}
+    s = res.stats()
+    assert (s.updated, s.inserted, s.dropped_deletes, s.max_change_ts) == (1, 1, 1, None)
+
+
+def test_stats_of_an_unexecuted_merge_does_not_block(spark, target):
+    """No action has run ``df``: stats() must run it rather than wait
+    on an observation nothing will fill."""
+    delta = mk(spark, [(1, "a2", T1, T2, "N"), (5, "e", T2, None, "N"), (98, "x", T2, T3, "Y")])
+    res = merge_soft_delete(target, delta, ["id"])
+    got = []
+    worker = threading.Thread(target=lambda: got.append(res.stats()), daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "stats() blocked on an unfilled observation"
+    s = got[0]
+    assert (s.updated, s.inserted, s.dropped_deletes, s.max_change_ts) == (1, 1, 1, T3)
 
 
 def test_empty_delta(spark, target):

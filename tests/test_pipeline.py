@@ -31,12 +31,12 @@ SCHEMA = T.StructType(
 )
 
 
-def build(spark, tmp, rows, table="t1", pk=("id",)):
+def build(spark, tmp, rows, table="t1", pk=("id",), strategy="auto"):
     cat = Catalog(spark)
     cat.put(table, spark.createDataFrame(rows, SCHEMA), pk=list(pk))
     target = ParquetTargetStore(spark, f"{tmp}/target")
     wm = WatermarkStore(spark, f"{tmp}/wm")
-    return cat, CdcPipeline(spark, cat, target, wm, max_parallel_tables=1)
+    return cat, CdcPipeline(spark, cat, target, wm, max_parallel_tables=1, merge_strategy=strategy)
 
 
 def target_map(pipe, table="t1"):
@@ -152,3 +152,52 @@ def test_parallel_waves_match_serial(spark, tmp_path):
     assert sorted(r.table for r in rep.results if r.status == "replicated") == [
         "c_child", "p_parent", "x_other",
     ]
+
+
+def test_changed_table_runs_no_collect_job(spark, tmp_path, jobs_of):
+    """Counts and the next watermark come from the observation the
+    target write fills: no stats pass, no max(change_ts) query."""
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N"), (2, "b", T1, None, "N")])
+    pipe.run()
+    cat.put("t1", spark.createDataFrame([(1, "a2", T1, T2, "N"), (3, "c", T2, None, "N")], SCHEMA), pk=["id"])
+    res, jobs = jobs_of(lambda: pipe.replicate_table("t1"))
+    assert (res.status, res.inserted, res.updated, res.dropped_deletes) == ("replicated", 1, 1, 0)
+    assert pipe.watermarks.get("t1") == T2
+    assert jobs, "no job ran in the table's group"
+    assert [j["name"] for j in jobs if j["name"].startswith("collect")] == []
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "broadcast_delta"])
+def test_gated_soft_delete_still_advances_watermark(spark, tmp_path, strategy):
+    """The batch's newest change is a soft-delete of a key the target
+    never saw: the insert gate drops the row, but its change time is
+    observed below the gate, so the watermark moves past it."""
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")], strategy=strategy)
+    pipe.run()
+    cat.put("t1", spark.createDataFrame([(1, "a", T1, None, "N"), (5, "gone", T2, T3, "Y")], SCHEMA), pk=["id"])
+    [res] = pipe.run().results
+    assert (res.status, res.inserted, res.updated, res.dropped_deletes) == ("replicated", 0, 0, 1)
+    assert target_map(pipe) == {1: ("a", "N")}
+    assert pipe.watermarks.get("t1") == T3
+    [again] = pipe.run().results
+    assert again.status == "empty_delta"
+
+
+@pytest.mark.parametrize("strategy", ["shuffle", "broadcast_delta"])
+def test_several_versions_of_a_key_in_one_batch(spark, tmp_path, strategy):
+    """A change log with two versions of an existing key and two of a
+    new one: the newest version of each lands, each key counts once."""
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")], strategy=strategy)
+    pipe.run()
+    log = [
+        (1, "a", T1, None, "N"),
+        (1, "a2", T1, T2, "N"),
+        (1, "a3", T1, T3, "N"),
+        (4, "d", T2, None, "N"),
+        (4, "d2", T2, T3, "N"),
+    ]
+    cat.put("t1", spark.createDataFrame(log, SCHEMA), pk=["id"])
+    [res] = pipe.run().results
+    assert (res.status, res.inserted, res.updated, res.dropped_deletes) == ("replicated", 1, 1, 0)
+    assert target_map(pipe) == {1: ("a3", "N"), 4: ("d2", "N")}
+    assert pipe.watermarks.get("t1") == T3

@@ -91,6 +91,20 @@ def test_merge_matches_merge_soft_delete(spark, store):
     assert {r["id"] for r in store.read("t", version=0).collect()} == {1, 2, 3}
 
 
+def test_merge_runs_no_job_after_the_data_write(spark, store, jobs_of):
+    """The merge counts come from the observation the commit's data
+    write fills: the join is not run again after the write."""
+    T1, T2 = TS(2024, 1, 1), TS(2024, 1, 2)
+    store.commit(_rows(spark, [(1, "a", T1, None, "N"), (2, "b", T1, None, "N")]), "t")
+    delta = _rows(spark, [(1, "a2", T1, T2, "N"), (5, "e", T2, None, "N"), (98, "x", T2, T2, "Y")])
+    (version, stats), jobs = jobs_of(lambda: store.merge(delta, "t", ["id"]))
+    assert version == 1
+    assert (stats.updated, stats.inserted, stats.dropped_deletes) == (1, 1, 1)
+    writes = [j["id"] for j in jobs if j["output_bytes"] > 0]
+    assert writes, "no job wrote the new version"
+    assert [j["name"] for j in jobs if j["id"] > writes[-1]] == []
+
+
 def test_commit_is_pointer_swap_only(spark, store):
     """The publish step is one os.replace of _latest: after a commit,
     the pointer is a bare version number and the manifest fully

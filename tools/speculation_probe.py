@@ -29,6 +29,10 @@ where an attempt race could plausibly leak:
     attempt races
   - pandas-UDF aggregation/window paths (scalar_pandas_udf,
     grouped_rank_pandas, pandas_grouped_agg, kmeans_assign, python_udtf)
+  - the replication pipeline (``pipeline_replicate``): one changed
+    table through ``CdcPipeline.replicate_table``, whose merge counts
+    and next watermark are observed metrics — accumulator-backed, so a
+    killed attempt that double-counted would show here
 
 Protocol: two fresh-JVM cells (base, spec) hash every target qid with
 the driver-faithful canonicalization (tests/duck_compare._rowset).
@@ -83,6 +87,8 @@ sys.path.insert(0, REPO)
 
 DEFAULT_SF = "/root/testdata/sf0.01"
 
+PIPELINE_CASE = "pipeline_replicate"
+
 TARGETS = [
     # Arrow mapInPandas kernels
     "ewma_smooth",
@@ -113,6 +119,8 @@ TARGETS = [
     "pandas_grouped_agg",
     "python_udtf",
     "kmeans_assign",
+    # replication pipeline: observed merge counts + watermark
+    PIPELINE_CASE,
 ]
 
 CELLS: dict[str, dict[str, str]] = {
@@ -189,6 +197,48 @@ class _AttemptKiller:
         self._thread.join(timeout=2)
 
 
+def _pipeline_case(spark, sf_dir: str):
+    """First load of the CDC orders as they stood at ``T0``, then one
+    incremental ``replicate_table`` over their current state (updates,
+    inserts, soft-deletes, gated soft-deletes). One row: the cycle's
+    ``TableResult`` counts, the watermark it committed and a digest of
+    the target's row set."""
+    import shutil
+    import tempfile
+
+    from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
+    from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
+    from oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline import (
+        CdcPipeline,
+        ParquetTargetStore,
+    )
+    from oracle_to_oracle_data_integration_pipeline_spark.queries.cdc_queries import (
+        _target_delta,
+        cdc_orders,
+    )
+    from tests.duck_compare import _rowset
+
+    work = tempfile.mkdtemp(prefix="o2o_spec_pipeline_")
+    try:
+        cat = Catalog(spark)
+        cat.put("orders", _target_delta(spark, sf_dir)[0], pk=["o_orderkey"])
+        pipe = CdcPipeline(spark, cat, ParquetTargetStore(spark, f"{work}/target"),
+                           WatermarkStore(spark, f"{work}/wm"), max_parallel_tables=1)
+        first = pipe.replicate_table("orders")
+        cat.put("orders", cdc_orders(spark, sf_dir), pk=["o_orderkey"])
+        res = pipe.replicate_table("orders")
+        tgt = pipe.target.read("orders")
+        canon = _rowset([c.lower() for c in tgt.columns], [tuple(r) for r in tgt.collect()])
+        digest = hashlib.sha256(repr(canon).encode()).hexdigest()[:16]
+        row = (first.status, res.status, res.inserted, res.updated, res.dropped_deletes,
+               str(pipe.watermarks.get("orders")), digest)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    cols = ["first_status", "status", "inserted", "updated", "dropped_deletes", "watermark",
+            "target_digest"]
+    return cols, [row]
+
+
 def run_cell(tag: str, sf_dir: str, qids: list[str] | None, out: str) -> None:
     from oracle_to_oracle_data_integration_pipeline_spark import queries as q
     from oracle_to_oracle_data_integration_pipeline_spark.session import get_spark
@@ -198,16 +248,20 @@ def run_cell(tag: str, sf_dir: str, qids: list[str] | None, out: str) -> None:
     conf["spark.ui.showConsoleProgress"] = "false"
     spark = get_spark(app_name=f"o2o_speculation_{tag}", extra_conf=conf)
     registry = q.all_queries()
-    targets = [t for t in (qids or TARGETS) if t in registry]
+    targets = [t for t in (qids or TARGETS) if t in registry or t == PIPELINE_CASE]
     killer = _AttemptKiller(spark) if tag == "spec" else None
     hashes: dict[str, str] = {}
     kills: dict[str, int] = {}
     for qid in targets:
         t0 = time.time()
         try:
-            df = registry[qid](spark, sf_dir)
-            cols = [c.lower() for c in df.columns]
-            rows = [tuple(r) for r in df.collect()]
+            if qid == PIPELINE_CASE:
+                cols, rows = _pipeline_case(spark, sf_dir)
+                print(f"{tag} {qid} {dict(zip(cols, rows[0]))}", flush=True)
+            else:
+                df = registry[qid](spark, sf_dir)
+                cols = [c.lower() for c in df.columns]
+                rows = [tuple(r) for r in df.collect()]
             canon = _rowset(cols, rows)
             hashes[qid] = hashlib.sha256(
                 (repr(sorted(cols)) + "\n" + repr(canon)).encode()
