@@ -23,11 +23,16 @@ MAX(GREATEST(...)) recompute                  observed on the merge join
 per-table try/except, summary, exit code    → RunReport with per-table
                                               error isolation
 
-Scale notes: tables at the same FK depth replicate concurrently
-(driver threads submitting independent Spark jobs — the reference is
-strictly serial); the merge is the only wide operation, and its delta
-side is typically small enough for AQE to broadcast. Target storage here is
-plain parquet with an atomic directory swap per table; at 100 TB the
+Scale notes: every table's delta read, merge and staged write run
+concurrently, across FK depths (driver threads submitting independent
+Spark jobs — the reference is strictly serial). Only the commit — the
+rename swap plus the watermark upsert — follows FK depth: a table
+commits once every table of a lower depth has committed or ended
+empty, skipped or failed, so a child's rows never become visible
+before its parents' rows of the same run. The merge is the only wide
+operation, and its delta side is typically small enough for AQE to
+broadcast. Target storage here is plain parquet with an atomic
+directory swap per table; at 100 TB the
 same `merge_soft_delete` plugs into Delta/Iceberg `MERGE INTO` via
 `foreachBatch` without changing semantics (SURVEY.md §7 "what's built-in
 vs custom").
@@ -37,9 +42,12 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -127,7 +135,13 @@ class ParquetTargetStore:
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))
 
-    def overwrite(self, table: str, df: DataFrame) -> None:
+    def overwrite(
+        self, table: str, df: DataFrame, before_swap: Callable[[], None] | None = None
+    ) -> None:
+        """Write ``df`` beside the table, call ``before_swap`` (the
+        pipeline's FK commit-order wait), then swap it in. A failure
+        before the swap removes the staged copy and leaves the previous
+        version in place."""
         from oracle_to_oracle_data_integration_pipeline_spark.sources.locking import (
             table_write_lock,
         )
@@ -135,7 +149,13 @@ class ParquetTargetStore:
         final = self.path(table)
         tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
         with table_write_lock(final):
-            df.write.mode("overwrite").parquet(tmp)
+            try:
+                df.write.mode("overwrite").parquet(tmp)
+                if before_swap is not None:
+                    before_swap()
+            except BaseException:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise
             old = f"{final}.old-{uuid.uuid4().hex[:8]}"
             if os.path.exists(final):
                 os.rename(final, old)
@@ -148,6 +168,25 @@ class ParquetTargetStore:
                     os.rename(old, final)
                 raise
             shutil.rmtree(old, ignore_errors=True)
+
+
+class _CommitOrder:
+    """FK commit order of one parallel run. ``wait(table)`` blocks until
+    every table of a lower depth has been released: committed with its
+    watermark upserted, or ended empty, skipped or failed."""
+
+    def __init__(self, depths: dict[str, int]):
+        self._depths = depths
+        self._released = {t: threading.Event() for t in depths}
+
+    def wait(self, table: str) -> None:
+        depth = self._depths[table]
+        for t, released in self._released.items():
+            if self._depths[t] < depth:
+                released.wait()
+
+    def release(self, table: str) -> None:
+        self._released[table].set()
 
 
 class CdcPipeline:
@@ -177,11 +216,13 @@ class CdcPipeline:
         # shuffle path (see operators/cdc.py merge_soft_delete).
         self.merge_strategy = merge_strategy
         self.broadcast_delta_max_rows = broadcast_delta_max_rows
+        self._commit_order: _CommitOrder | None = None  # set during a parallel run
 
     # -- per-table replication (reference loop body,
     #    /root/reference/scripts/03_cdc_etl.py:259-351) ---------------
 
     def replicate_table(self, table: str) -> TableResult:
+        commit_order = self._commit_order
         try:
             pk = self.source.get_pk_columns(table)
             if not pk:
@@ -224,7 +265,11 @@ class CdcPipeline:
                     else:
                         strategy = self.merge_strategy
                     merged = merge_soft_delete(tgt, delta_clean, pk, strategy=strategy)
-                    self.target.overwrite(table, merged.df)
+                    self.target.overwrite(
+                        table,
+                        merged.df,
+                        before_swap=None if commit_order is None else partial(commit_order.wait, table),
+                    )
 
                 # The write filled the merge observation. Watermark
                 # advance only after a successful write (at-least-once
@@ -243,6 +288,11 @@ class CdcPipeline:
                 delta.unpersist()
         except Exception as exc:  # per-table isolation (03_cdc_etl.py:348-352)
             return TableResult(table, "failed", error=f"{type(exc).__name__}: {exc}")
+        finally:
+            # After the watermark upsert, and on every exit path, so a
+            # failed or empty parent never holds back its children.
+            if commit_order is not None:
+                commit_order.release(table)
 
     # -- full run ------------------------------------------------------
 
@@ -258,14 +308,18 @@ class CdcPipeline:
                 report.results.append(self.replicate_table(t))
             return report
 
-        # Depth waves: tables in a wave have no FK relation → replicate
-        # concurrently (engine improvement over the serial reference).
+        # One pool pass over every table (engine improvement over the
+        # serial reference): reads, merges and staged writes overlap
+        # across FK depths; each swap waits for the lower depths to
+        # commit. Submitted by (depth, load order), so every table a
+        # commit waits on was dequeued before it: no deadlock, however
+        # small the pool.
         depths = topo_depths(tables, edges)
-        by_depth: dict[int, list[str]] = {}
-        for t in load_order:
-            by_depth.setdefault(depths[t], []).append(t)
-        with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
-            for depth in sorted(by_depth):
-                for res in pool.map(self.replicate_table, by_depth[depth]):
-                    report.results.append(res)
+        queue = sorted(load_order, key=depths.__getitem__)
+        self._commit_order = _CommitOrder(depths)
+        try:
+            with ThreadPoolExecutor(max_workers=self.max_parallel_tables) as pool:
+                report.results.extend(pool.map(self.replicate_table, queue))
+        finally:
+            self._commit_order = None
         return report

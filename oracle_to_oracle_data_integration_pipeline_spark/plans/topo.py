@@ -10,9 +10,10 @@ the run.
 Engine refinements over the reference:
 - deterministic output (lexicographic tie-break among ready tables) so
   runs and tests are reproducible;
-- ``depth`` levels exposed — tables at the same depth have no FK
-  dependency between them and can be replicated concurrently (the
-  reference runs strictly serially; SURVEY.md §4 notes the parallelism
+- ``depth`` levels exposed — they order commits, not work. The
+  pipeline reads, merges and stages every table concurrently, and a
+  table commits once every table of a lower depth has (the reference
+  runs strictly serially; SURVEY.md §4 notes the parallelism
   opportunity). Driver-side control flow only; catalog-scale data, so
   plain Python is the right tool — no Spark job involved.
 """
@@ -58,8 +59,9 @@ def topo_sort_tables(
 
 
 def topo_depths(tables: list[str], fk_edges: list[tuple[str, str]]) -> dict[str, int]:
-    """Depth level per table (0 = no parents). Tables sharing a depth can
-    load concurrently."""
+    """Depth level per table (0 = no parents); a table's depth is above
+    all of its parents'. Cycle members get one depth each after the
+    rest, in input order, so they commit one after another."""
     table_set = set(tables)
     parents: dict[str, list[str]] = defaultdict(list)
     for p, c in fk_edges:

@@ -14,7 +14,10 @@ session is tuned for analytic work at scale:
 - session timezone pinned to UTC so timestamp semantics are stable and
   comparable against the DuckDB oracle;
 - Arrow enabled for the Pandas-UDF slow path (vectorized batches instead
-  of row-at-a-time pickling).
+  of row-at-a-time pickling);
+- the package's parent directory on the Python workers' ``PYTHONPATH``,
+  so UDFs and ``mapInPandas`` kernels import the package whatever the
+  driver's working directory.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -56,7 +60,12 @@ def get_spark(
         # (converted to µs timestamps by the loaders that need it)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # workers otherwise import the package only from their working
+    # directory, which is the driver's
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(filter(None, [_PACKAGE_PARENT, worker_path]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,8 +6,11 @@ semantics (`/root/reference/scripts/03_cdc_etl.py:238-379`)."""
 from __future__ import annotations
 
 import datetime
+import os
+import threading
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog, TableMeta
@@ -201,3 +204,113 @@ def test_several_versions_of_a_key_in_one_batch(spark, tmp_path, strategy):
     assert (res.status, res.inserted, res.updated, res.dropped_deletes) == ("replicated", 1, 1, 0)
     assert target_map(pipe) == {1: ("a3", "N"), 4: ("d2", "N")}
     assert pipe.watermarks.get("t1") == T3
+
+
+def test_failed_overwrite_leaves_no_staged_dir(spark, tmp_path):
+    """A write that fails, or a commit wait that fails, removes the
+    staged ``<table>.tmp-*`` copy; the previous version still reads."""
+    target = ParquetTargetStore(spark, f"{tmp_path}/target")
+    target.overwrite("t1", spark.range(3))
+    bad = spark.range(3).withColumn("boom", F.raise_error(F.lit("planted write failure")))
+    with pytest.raises(Exception, match="planted write failure"):
+        target.overwrite("t1", bad)
+
+    def fail_wait():
+        raise RuntimeError("planted commit-wait failure")
+
+    with pytest.raises(RuntimeError, match="planted commit-wait failure"):
+        target.overwrite("t1", spark.range(5), before_swap=fail_wait)
+    assert [n for n in os.listdir(target.root) if n.startswith("t1.")] == ["t1.lock"]
+    assert sorted(r.id for r in target.read("t1").collect()) == [0, 1, 2]
+
+
+def _state(pipe, tables):
+    """Each table's target rows and watermark."""
+    return {t: (sorted(tuple(r) for r in pipe.target.read(t).collect()), pipe.watermarks.get(t)) for t in tables}
+
+
+def test_commits_follow_fk_order(spark, tmp_path):
+    """The child's merge is staged while its parent's is still in
+    flight (the parent has the larger delta, and its write is held
+    until the child has staged), yet the child swaps in only after the
+    parent's watermark is written. The targets equal a serial run's."""
+    log: list[tuple[str, str]] = []
+    child_staged = threading.Event()
+
+    class Target(ParquetTargetStore):
+        def overwrite(self, table, df, before_swap=None):
+            def staged():
+                log.append(("staged", table))
+                if table == "c_child":
+                    child_staged.set()
+                if before_swap is not None:
+                    before_swap()
+
+            if table == "p_parent" and not child_staged.wait(timeout=120):
+                raise AssertionError("the child never staged while its parent was in flight")
+            super().overwrite(table, df, before_swap=staged)
+            log.append(("swapped", table))
+
+    class Watermarks(WatermarkStore):
+        def upsert(self, table, ts):
+            super().upsert(table, ts)
+            log.append(("watermark", table))
+
+    tables = ["p_parent", "c_child", "x_other"]
+    cat = Catalog(spark)
+    parent_rows = [(i, f"p{i}", T1, T2 if i % 3 else None, "N") for i in range(2000)]
+    cat.put("p_parent", spark.createDataFrame(parent_rows, SCHEMA), pk=["id"])
+    cat.put("c_child", spark.createDataFrame([(1, "c", T1, None, "N")], SCHEMA), pk=["id"])
+    cat.put("x_other", spark.createDataFrame([(2, "x", T3, None, "N")], SCHEMA), pk=["id"])
+    cat._fk_edges = [("p_parent", "c_child")]
+
+    pipe = CdcPipeline(spark, cat, Target(spark, f"{tmp_path}/par"), Watermarks(spark, f"{tmp_path}/par_wm"),
+                       max_parallel_tables=3)
+    rep = pipe.run(parallel=True)
+    assert {r.table: r.status for r in rep.results} == dict.fromkeys(tables, "replicated"), rep.results
+    assert log.index(("staged", "c_child")) < log.index(("swapped", "p_parent")), log
+    assert log.index(("watermark", "p_parent")) < log.index(("swapped", "c_child")), log
+
+    serial = CdcPipeline(spark, cat, ParquetTargetStore(spark, f"{tmp_path}/ser"),
+                         WatermarkStore(spark, f"{tmp_path}/ser_wm"))
+    assert serial.run(parallel=False).exit_code == 0
+    assert _state(pipe, tables) == _state(serial, tables)
+
+
+def test_small_pool_no_deadlock_and_failures_release(spark, tmp_path):
+    """A 6-table FK chain and a 2-table FK cycle on a 2-thread pool
+    finish, with results in the serial order. A parent that fails
+    validation (t2) or has no primary key (t4) still releases its
+    children, on the first load and on the no-change run after it."""
+    chain = [f"t{i}" for i in range(6)]
+    order = chain + ["cy_a", "cy_b"]
+    cat = Catalog(spark)
+    for i, name in enumerate(order):
+        df = spark.createDataFrame([(i, name, T1, None, "N")], SCHEMA)
+        if name == "t2":
+            df = df.drop("updated_at")  # fails validate_cdc_columns
+        cat.put(name, df, pk=[] if name == "t4" else ["id"])
+    cat._fk_edges = list(zip(chain, chain[1:])) + [("t5", "cy_a"), ("cy_a", "cy_b"), ("cy_b", "cy_a")]
+    pipe = CdcPipeline(spark, cat, ParquetTargetStore(spark, f"{tmp_path}/target"),
+                       WatermarkStore(spark, f"{tmp_path}/wm"), max_parallel_tables=2)
+
+    def run_joined():
+        box = []
+        worker = threading.Thread(target=lambda: box.append(pipe.run(parallel=True)), daemon=True)
+        worker.start()
+        worker.join(timeout=300)
+        if worker.is_alive():
+            # unblock the stuck pool threads, or the interpreter's exit
+            # would wait on them forever
+            for released in pipe._commit_order._released.values():
+                released.set()
+            pytest.fail("parallel run did not finish: commit-order deadlock")
+        return box[0]
+
+    special = {"t2": "failed", "t4": "skipped_no_pk"}
+    for status in ("replicated", "empty_delta"):
+        rep = run_joined()
+        assert [r.table for r in rep.results] == order
+        assert {r.table: r.status for r in rep.results} == {t: special.get(t, status) for t in order}
+    assert "missing CDC columns" in rep.results[2].error
+    assert [r.id for r in pipe.target.read("t5").collect()] == [5]
