@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import footer_schema
+
 # CDC columns every tracked table carries, mirroring
 # /root/reference/config/settings.py:22-27 (name, Spark type, "default").
 CDC_COLUMNS: list[tuple[str, T.DataType]] = [
@@ -63,7 +65,8 @@ FIXTURE_FK_EDGES: list[tuple[str, str]] = [
 
 @dataclass
 class TableMeta:
-    """Metadata for one registered table."""
+    """Metadata for one registered table. ``schema`` is the one the
+    latest ``Catalog.get_schema`` or ``load`` saw."""
 
     name: str
     path: str | None = None
@@ -89,7 +92,7 @@ class Catalog:
         self.spark = spark
         self._tables: dict[str, TableMeta] = {}
         self._fk_edges: list[tuple[str, str]] = []
-        self._cache: dict[str, DataFrame] = {}
+        self._frames: dict[str, DataFrame] = {}  # put() tables
 
     # -- construction -------------------------------------------------
 
@@ -162,7 +165,7 @@ class Catalog:
         """Ordered column list (reference orders by column_id,
         `/root/reference/utils/database.py:74-84`); StructType preserves
         source order."""
-        return list(self.load(name).columns)
+        return self.get_schema(name).names
 
     def get_fk_relationships(self) -> list[tuple[str, str]]:
         return list(self._fk_edges)
@@ -175,25 +178,41 @@ class Catalog:
         (`/root/reference/scripts/02_clone_schema_structure.py:21-40`)
         has no counterpart here.
         """
-        schema = self.load(name).schema
+        schema = self.get_schema(name)
         cols = ", ".join(f"{f.name} {f.dataType.simpleString().upper()}" for f in schema.fields)
         return f"CREATE TABLE {name} ({cols})"
 
     # -- data plane ----------------------------------------------------
 
+    def get_schema(self, name: str) -> T.StructType:
+        """The table's schema, kept in its ``TableMeta.schema``. A path
+        table's is read fresh from a parquet footer on the driver
+        (``footer_schema``: no Spark job), so a source whose schema
+        evolves is seen on the next call."""
+        key = name.lower()
+        meta = self._tables[key]
+        if key in self._frames:
+            meta.schema = self._frames[key].schema
+        elif meta.path is None:
+            raise KeyError(f"table {name} has no path and no DataFrame")
+        else:
+            meta.schema = footer_schema(self.spark, meta.path)
+        return meta.schema
+
     def load(self, name: str) -> DataFrame:
         """DataFrame for a registered table (lazy parquet scan; Catalyst
-        handles pushdown/pruning — nothing is materialized here)."""
+        handles pushdown/pruning — nothing is materialized here).
+
+        A path table gets a fresh reader, and with it a fresh file
+        listing, on every call: a reader kept across calls keeps its
+        file index and misses part files added since."""
         key = name.lower()
-        if key not in self._cache:
-            meta = self._tables[key]
-            if meta.path is None:
-                raise KeyError(f"table {name} has no path and no cached DataFrame")
-            self._cache[key] = self.spark.read.parquet(meta.path)
-        return self._cache[key]
+        if key in self._frames:
+            return self._frames[key]
+        return self.spark.read.schema(self.get_schema(name)).parquet(self._tables[key].path)
 
     def put(self, name: str, df: DataFrame, pk: list[str] | None = None) -> None:
         """Register an in-memory DataFrame as a table (used by tests and
         by the pipeline for derived snapshots)."""
         self._tables[name.lower()] = TableMeta(name=name, pk=list(pk or []))
-        self._cache[name.lower()] = df
+        self._frames[name.lower()] = df

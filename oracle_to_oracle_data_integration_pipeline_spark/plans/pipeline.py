@@ -10,8 +10,11 @@ topo sort, cycles appended                  → plans.topo (deterministic)
 per-table: read watermark                   → WatermarkStore.get
 full JDBC read then filter derived column   → pushdown-safe base-column
                                               predicate at the scan
-count() to gate empty delta                 → cheap isEmpty() on the
-                                              cached delta (no full count)
+count() to gate empty delta                 → the source's parquet footers
+                                              on the driver (no Spark job):
+                                              no row group newer than the
+                                              watermark → empty_delta; else
+                                              isEmpty() on the cached delta
 stage to STG_ table + Oracle MERGE          → merge_soft_delete (one
                                               shuffle join; no staging
                                               copy — the DataFrame IS
@@ -31,8 +34,17 @@ commits once every table of a lower depth has committed or ended
 empty, skipped or failed, so a child's rows never become visible
 before its parents' rows of the same run. The merge is the only wide
 operation, and its delta side is typically small enough for AQE to
-broadcast. Target storage here is plain parquet with an atomic
-directory swap per table; at 100 TB the
+broadcast. Metadata costs no Spark job: schemas come from parquet
+footers (``sources.parquet.footer_schema``), and a table whose every
+row group's ``created_at``/``updated_at`` max is at or below the
+watermark ends ``empty_delta`` from its footers alone
+(``newer_rows_bound``). The rows of the row groups that may hold newer
+changes bound the delta, so a bound under ``broadcast_delta_max_rows``
+picks the broadcast merge without a ``count()``. The gate reads one
+footer per data file per cycle, fresh each time; at millions of files
+per-file statistics belong in a manifest written with the data, not in
+a listing plus a footer read per file. Target storage here is plain
+parquet with an atomic directory swap per table; at 100 TB the
 same `merge_soft_delete` plugs into Delta/Iceberg `MERGE INTO` via
 `foreachBatch` without changing semantics (SURVEY.md §7 "what's built-in
 vs custom").
@@ -50,9 +62,13 @@ from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 
 from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
 from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
+    CREATED,
+    UPDATED,
     delta_predicate,
     latest_per_key,
     merge_soft_delete,
@@ -60,6 +76,7 @@ from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
 from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
 from oracle_to_oracle_data_integration_pipeline_spark.plans.schema_tools import validate_cdc_columns
 from oracle_to_oracle_data_integration_pipeline_spark.plans.topo import topo_depths, topo_sort_tables
+from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import footer_schema, newer_rows_bound
 
 
 @dataclass
@@ -133,7 +150,10 @@ class ParquetTargetStore:
         return os.path.exists(self.path(table))
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """The target as it stands, its schema from its own footer (it
+        differs from the source's under schema evolution)."""
+        path = self.path(table)
+        return self.spark.read.schema(footer_schema(self.spark, path)).parquet(path)
 
     def overwrite(
         self, table: str, df: DataFrame, before_swap: Callable[[], None] | None = None
@@ -229,10 +249,17 @@ class CdcPipeline:
                 # Reference skips PK-less tables (03_cdc_etl.py:264-268).
                 return TableResult(table, "skipped_no_pk")
 
-            src = self.source.load(table)
-            validate_cdc_columns(src, table)  # 03_cdc_etl.py:270-274
+            schema = self.source.get_schema(table)
+            validate_cdc_columns(schema, table)  # 03_cdc_etl.py:270-274
 
             last_ts = self.watermarks.get(table)
+            # Skip-only gate: the footers may prove the delta empty, at
+            # no Spark job; what they cannot prove, Spark checks below.
+            bound = self._delta_bound(table, schema, last_ts)
+            if bound == 0:
+                return TableResult(table, "empty_delta")
+
+            src = self.source.load(table)
             pred = delta_predicate(last_ts)
             delta = src.filter(pred) if pred is not None else src
             # One materialization, reused for the emptiness gate, the
@@ -259,8 +286,12 @@ class CdcPipeline:
                     else:
                         tgt = src.limit(0)  # first run: empty clone target
                     if self.merge_strategy == "auto":
-                        # count() is cheap here: delta is already cached
-                        small = last_ts is not None and delta.count() <= self.broadcast_delta_max_rows
+                        # The footer bound caps the delta's rows, so
+                        # under the limit it decides without a count().
+                        small = last_ts is not None and (
+                            bound is not None and bound <= self.broadcast_delta_max_rows
+                            or delta.count() <= self.broadcast_delta_max_rows
+                        )
                         strategy = "broadcast_delta" if small else "shuffle"
                     else:
                         strategy = self.merge_strategy
@@ -293,6 +324,18 @@ class CdcPipeline:
             # failed or empty parent never holds back its children.
             if commit_order is not None:
                 commit_order.release(table)
+
+    def _delta_bound(self, table: str, schema: T.StructType, last_ts) -> int | None:
+        """Upper bound on the delta's rows from the source's parquet
+        footers, 0 when no row can be newer than ``last_ts``; None when
+        only Spark can tell: no watermark, no parquet path, CDC columns
+        Spark does not read as instants, or a watermark literal that
+        would be timestamp_ntz."""
+        types = {f.name.lower(): f.dataType for f in schema.fields}
+        instants = all(isinstance(types.get(c), T.TimestampType) for c in (CREATED, UPDATED))
+        if last_ts is None or not instants or is_timestamp_ntz_preferred():
+            return None
+        return newer_rows_bound(self.source.get_meta(table).path, last_ts, (CREATED, UPDATED))
 
     # -- full run ------------------------------------------------------
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import CREATED, DELETED, UPDATED
 
@@ -57,10 +58,12 @@ def add_missing_cdc_columns(df: DataFrame, created_default=None) -> DataFrame:
     return out
 
 
-def validate_cdc_columns(df: DataFrame, table: str) -> None:
+def validate_cdc_columns(df: DataFrame | StructType, table: str) -> None:
     """Hard check mirroring the reference's per-table validation
-    (`/root/reference/scripts/03_cdc_etl.py:270-274`)."""
-    missing = {CREATED, UPDATED, DELETED} - {c.lower() for c in df.columns}
+    (`/root/reference/scripts/03_cdc_etl.py:270-274`), on a DataFrame or
+    a schema."""
+    names = df.names if isinstance(df, StructType) else df.columns
+    missing = {CREATED, UPDATED, DELETED} - {c.lower() for c in names}
     if missing:
         raise ValueError(f"table {table} missing CDC columns: {sorted(missing)}")
 

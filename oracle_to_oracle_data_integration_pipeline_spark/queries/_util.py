@@ -17,10 +17,11 @@ compare stable (SURVEY.md §7 risk 6):
 from __future__ import annotations
 
 import os
-import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import footer_schema
 
 # Single source for the sessionization gap: q_sessionize
 # (llm_queries2), session_window_batch (analytics_queries), and both
@@ -102,36 +103,10 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# (path, mtime_ns, size) -> parquet schema. A bare
-# ``spark.read.parquet(path)`` runs a footer-read JOB per call for
-# schema inference (~25 ms, round 11 profile: one per load() in every
-# query); the schema is pure file metadata, so it is memoized on the
-# file's identity stamp and passed explicitly. The stamp invalidates
-# on any rewrite of a regular file; a directory's stamp does not move
-# when a part file inside is rewritten in place, so datasets are never
-# memoized. Data is still read fresh from parquet every execution —
-# nothing about query RESULTS is cached here.
-_SCHEMA_MEMO: dict = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    try:
-        st = os.stat(path)
-    except OSError:
-        st = None
-    if st is None or not stat.S_ISREG(st.st_mode):
-        return spark.read.parquet(path).schema  # dirs/globs: no memo
-    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    hit = _SCHEMA_MEMO.get(key)
-    if hit is None:
-        hit = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
-    return hit
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     tune(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    df = spark.read.schema(footer_schema(spark, path)).parquet(path)
     if table == "events":
         df = normalize_events_ts(df)
     return df

@@ -23,12 +23,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oracle_to_oracle_data_integration_pipeline_spark.queries._util import (
-    _parquet_schema,
     local_result,
     normalize_events_ts,
     scratch_dir,
     tune,
 )
+from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import footer_schema
 from oracle_to_oracle_data_integration_pipeline_spark.streaming.windows import (
     session_agg,
     sliding_agg,
@@ -128,8 +128,8 @@ def _drain_events_stream(
     name = f"{prefix}{uuid.uuid4().hex[:8]}"
     try:
         os.symlink(path, os.path.join(stream_dir, "events.parquet"))
-        # ts dtype varies by fixture vintage; memoized footer read
-        schema = _parquet_schema(spark, path)
+        # ts dtype varies by fixture vintage; job-free footer read
+        schema = footer_schema(spark, path)
 
         def src() -> DataFrame:
             return normalize_events_ts(spark.readStream.schema(schema).parquet(stream_dir))
@@ -373,7 +373,7 @@ def q_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"events_incr_{uuid.uuid4().hex[:8]}"
     try:
         _p = os.path.join(sf_dir, "events.parquet")
-        src_df = spark.read.schema(_parquet_schema(spark, _p)).parquet(_p)
+        src_df = spark.read.schema(footer_schema(spark, _p)).parquet(_p)
         src_df.repartition(8).write.mode("overwrite").parquet(stream_dir)
         schema = src_df.schema
         stream = normalize_events_ts(
@@ -428,7 +428,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"events_stateful_{uuid.uuid4().hex[:8]}"
     try:
         _p = os.path.join(sf_dir, "events.parquet")
-        src_df = spark.read.schema(_parquet_schema(spark, _p)).parquet(_p)
+        src_df = spark.read.schema(footer_schema(spark, _p)).parquet(_p)
         src_df.repartition(8).write.mode("overwrite").parquet(stream_dir)
         stream = normalize_events_ts(
             spark.readStream.schema(src_df.schema)
@@ -779,7 +779,7 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"events_ewma_{uuid.uuid4().hex[:8]}"
     try:
         _p = os.path.join(sf_dir, "events.parquet")
-        src_df = spark.read.schema(_parquet_schema(spark, _p)).parquet(_p)
+        src_df = spark.read.schema(footer_schema(spark, _p)).parquet(_p)
         # 8 contiguous event-time ranges; file i+1 strictly later than
         # i, with explicit ascending mtimes + lexicographic names so
         # the file source's replay order cannot tie-break randomly.
@@ -884,7 +884,7 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"events_wm_late_{uuid.uuid4().hex[:8]}"
     try:
         _p = os.path.join(sf_dir, "events.parquet")
-        src_df = spark.read.schema(_parquet_schema(spark, _p)).parquet(_p)
+        src_df = spark.read.schema(footer_schema(spark, _p)).parquet(_p)
         src_n = normalize_events_ts(src_df)
         late_cond = _wm_late_cond()
         early = F.col("ts") < F.lit(WM_SPLIT_TS).cast("timestamp")

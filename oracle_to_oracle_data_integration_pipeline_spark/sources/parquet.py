@@ -6,13 +6,173 @@ becomes ~100k independent scan tasks. This is the property the engine's
 delta predicate is designed around (see operators/cdc.py:
 ``delta_predicate`` rewrites the derived-column filter onto base columns
 so pushdown survives).
+
+The same footers answer metadata questions on the driver, with no
+Spark job: ``footer_schema`` is the schema ``spark.read.parquet`` would
+infer, and ``newer_rows_bound`` bounds the rows newer than a watermark
+from row-group statistics. Both read the footers fresh on every call.
 """
 
 from __future__ import annotations
 
+import calendar
+import functools
+import json
 import os
+import time
+from datetime import datetime
 
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import types as T
+
+# Characters that make Spark glob a path (SparkHadoopUtil.isGlobPath).
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def data_files(path: str) -> list[str] | None:
+    """The data files Spark's file index lists for ``path``, in the
+    order its schema inference takes them (sorted by path), or None
+    when this listing cannot mirror Spark's: a glob or non-local path,
+    a subdirectory (hive partitions, nested datasets), or a summary
+    file (``_metadata``/``_common_metadata``, which inference reads
+    first). Like Spark, a directory's every non-hidden file counts,
+    ``.parquet`` suffix or not."""
+    if _GLOB_CHARS.intersection(path):
+        return None
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    with os.scandir(path) as entries:
+        for e in entries:
+            name = e.name
+            if name.startswith(("_metadata", "_common_metadata")):
+                return None
+            # HadoopFSUtils.shouldFilterOutPathName
+            if (name.startswith("_") and "=" not in name) or name.startswith(".") \
+                    or name.endswith("._COPYING_"):
+                continue
+            if not e.is_file():
+                return None
+            files.append(e.path)
+    return sorted(files)
+
+
+@functools.lru_cache(maxsize=None)
+def _footer_api(jvm):
+    """JVM handles for one gateway: each lookup is a py4j round trip."""
+    hadoop = jvm.org.apache.parquet.hadoop
+    fmt = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$")
+    return (
+        jvm.org.apache.hadoop.fs.Path,
+        hadoop.ParquetFileReader,
+        hadoop.Footer,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        jvm.scala.jdk.javaapi.CollectionConverters,
+        fmt.__getattr__("MODULE$"),
+    )
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """``spark.read.parquet(path).schema``, without its schema-inference
+    job.
+
+    Reads the first data file's footer on the driver and converts it
+    with Spark's own ``ParquetFileFormat.readSchema``, the converter
+    inference runs (session confs such as NTZ inference and
+    ``nanosAsLong``, the Spark schema that Spark-written files carry),
+    then makes it nullable as a file source does. Anything it cannot
+    mirror (see ``data_files``, schema merging, a py4j error) falls back
+    to plain inference. Nothing is memoized: a part file rewritten in
+    place keeps its directory's stamp, and a file rewritten at the same
+    size within one mtime tick keeps its own."""
+    files = data_files(path)
+    if files and spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "false":
+        try:
+            Path, reader, Footer, skip_row_groups, seqs, fmt = _footer_api(spark._jvm)
+            p = Path(files[0])
+            footer = Footer(p, reader.readFooter(spark._jsc.hadoopConfiguration(), p, skip_row_groups))
+            schema = fmt.readSchema(seqs.asScala([footer]).toSeq(), spark._jsparkSession)
+            return T.StructType.fromJson(json.loads(schema.get().asNullable().json()))
+        except Py4JError:
+            pass
+    return spark.read.parquet(path).schema
+
+
+def _instant_us(ts: datetime) -> int:
+    """Microseconds since the epoch of ``ts`` as PySpark's datetime
+    literal converter computes them: a naive value is local time."""
+    secs = calendar.timegm(ts.utctimetuple()) if ts.tzinfo else time.mktime(ts.timetuple())
+    return int(secs) * 1_000_000 + ts.microsecond
+
+
+def _micros_per_unit(col) -> int | None:
+    """µs per stored unit of a top-level UTC-adjusted INT64 timestamp
+    column; None for any other column (naive or nanosecond timestamps,
+    INT96, non-timestamps), whose statistics the gate does not read."""
+    lt = col.logical_type
+    if col.physical_type != "INT64" or lt.type != "TIMESTAMP" or col.max_repetition_level:
+        return None
+    spec = json.loads(lt.to_json())
+    if not spec.get("isAdjustedToUTC"):
+        return None
+    return {"milliseconds": 1000, "microseconds": 1}.get(spec.get("timeUnit"))
+
+
+def _may_be_newer(chunk, num_rows: int, scale: int, since_us: int) -> bool:
+    st = chunk.statistics
+    if st is None or not st.has_null_count:
+        return True
+    if st.null_count == num_rows:
+        return False  # all null: no value, so none newer
+    if not st.has_min_max:
+        return True
+    return st.max_raw * scale > since_us
+
+
+def newer_rows_bound(path: str | None, since, columns: tuple[str, ...]) -> int | None:
+    """Upper bound on the rows of the parquet table at ``path`` that
+    hold a value newer than ``since`` (strict ``>``) in any of
+    ``columns``, summed over the row groups whose statistics allow one.
+    0 proves there is no such row. None when the footers cannot bound
+    it: no path, a listing Spark may not share (``data_files``), a
+    file pyarrow cannot parse, a column missing, ambiguous or not a
+    UTC-adjusted micro/millisecond timestamp, or a ``since`` that is
+    not a datetime. Columns match case-insensitively, as Spark resolves
+    them. Reads every data file's footer on the driver, fresh on every
+    call."""
+    if path is None or not isinstance(since, datetime):
+        return None
+    files = data_files(path)
+    if files is None:
+        return None
+    since_us = _instant_us(since)
+    wanted = {c.lower() for c in columns}
+    bound = 0
+    for f in files:
+        try:
+            md = pq.read_metadata(f)
+        except Exception:  # not parquet, truncated, unreadable
+            return None
+        cols = {}
+        for i in range(md.num_columns):
+            col = md.schema.column(i)
+            name = col.path.lower()
+            if name in wanted:
+                scale = _micros_per_unit(col)
+                if scale is None or name in cols:
+                    return None
+                cols[name] = (i, scale)
+        if len(cols) != len(wanted):
+            return None
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            if any(_may_be_newer(rg.column(i), rg.num_rows, scale, since_us) for i, scale in cols.values()):
+                bound += rg.num_rows
+    return bound
 
 
 class ParquetSource:
@@ -27,7 +187,8 @@ class ParquetSource:
         return p if os.path.exists(p) else os.path.join(self.root, table)
 
     def load(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        path = self.path(table)
+        return self.spark.read.schema(footer_schema(self.spark, path)).parquet(path)
 
     def load_where(self, table: str, predicate: Column | None) -> DataFrame:
         df = self.load(table)
