@@ -219,13 +219,18 @@ def cmd_compact(args) -> int:
     per run; readers slow down long before data size is the problem)."""
     import os
 
+    from oracle_to_oracle_data_integration_pipeline_spark.sources.locking import is_swap_sibling
     from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import ParquetSink
 
     spark = get_spark(app_name="o2o_compact")
     sink = ParquetSink(args.target)
+    # a copy a killed swap left staged or parked is not a table; the
+    # compact of its table sweeps it
     tables = args.tables or sorted(
         d for d in os.listdir(args.target)
-        if os.path.isdir(os.path.join(args.target, d)) and not d.startswith((".", "_"))
+        if os.path.isdir(os.path.join(args.target, d))
+        and not d.startswith((".", "_"))
+        and not is_swap_sibling(d)
     )
     failed = 0
     for table in tables:

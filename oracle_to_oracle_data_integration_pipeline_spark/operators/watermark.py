@@ -120,7 +120,7 @@ class WatermarkStore:
             # writer dying between the steps never loses state
             bak = f"{self.path}.migrating"
             shutil.rmtree(bak, ignore_errors=True)
-            os.rename(self.path, bak)
+            os.replace(self.path, bak)
             os.replace(tmp, self.path)
             shutil.rmtree(bak, ignore_errors=True)
         else:

@@ -44,7 +44,8 @@ picks the broadcast merge without a ``count()``. The gate reads one
 footer per data file per cycle, fresh each time; at millions of files
 per-file statistics belong in a manifest written with the data, not in
 a listing plus a footer read per file. Target storage here is plain
-parquet with an atomic directory swap per table; at 100 TB the
+parquet, replaced per table by one stage-and-swap
+(``sources.locking.swap_dir``); at 100 TB the
 same `merge_soft_delete` plugs into Delta/Iceberg `MERGE INTO` via
 `foreachBatch` without changing semantics (SURVEY.md §7 "what's built-in
 vs custom").
@@ -53,9 +54,7 @@ vs custom").
 from __future__ import annotations
 
 import os
-import shutil
 import threading
-import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -76,6 +75,7 @@ from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
 from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
 from oracle_to_oracle_data_integration_pipeline_spark.plans.schema_tools import validate_cdc_columns
 from oracle_to_oracle_data_integration_pipeline_spark.plans.topo import topo_depths, topo_sort_tables
+from oracle_to_oracle_data_integration_pipeline_spark.sources import locking
 from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import footer_schema, newer_rows_bound
 
 
@@ -124,18 +124,13 @@ class RunReport:
 
 
 class ParquetTargetStore:
-    """Per-table parquet target with rename-swap replacement.
-
-    The merge output replaces the table directory via write-to-temp +
-    two renames under the table's write lock (sources/locking.py —
-    shared with ``ParquetSink.compact`` and held by
-    ``CdcPipeline.replicate_table`` across its whole read→merge→swap,
-    so concurrent mutators serialize on the full critical section, not
-    just the rename window; the lock is thread-reentrant so the nested
-    acquisition here is free). A failed swap restores the previous
-    version. Readers are not locked: between the two renames the path
-    is briefly missing (ENOENT) — retry; atomic dir exchange needs
-    renameat2(RENAME_EXCHANGE) or a table-format metadata commit.
+    """Per-table parquet target, replaced whole on each merge by
+    ``sources.locking.swap_dir``: the stage-and-swap shared with
+    ``ParquetSink.compact``, under the table's write lock (which
+    ``CdcPipeline.replicate_table`` holds across its whole
+    read→merge→swap; it is thread-reentrant, so the swap's own
+    acquisition nests freely). Readers are not locked: between the
+    swap's two renames the path is briefly missing (ENOENT) — retry.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -162,32 +157,7 @@ class ParquetTargetStore:
         pipeline's FK commit-order wait), then swap it in. A failure
         before the swap removes the staged copy and leaves the previous
         version in place."""
-        from oracle_to_oracle_data_integration_pipeline_spark.sources.locking import (
-            table_write_lock,
-        )
-
-        final = self.path(table)
-        tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-        with table_write_lock(final):
-            try:
-                df.write.mode("overwrite").parquet(tmp)
-                if before_swap is not None:
-                    before_swap()
-            except BaseException:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            old = f"{final}.old-{uuid.uuid4().hex[:8]}"
-            if os.path.exists(final):
-                os.rename(final, old)
-            try:
-                os.rename(tmp, final)
-            except BaseException:
-                # restore the previous version rather than leaving the
-                # table path permanently missing
-                if os.path.exists(old) and not os.path.exists(final):
-                    os.rename(old, final)
-                raise
-            shutil.rmtree(old, ignore_errors=True)
+        locking.swap_dir(self.path(table), df.write.mode("overwrite").parquet, before_swap)
 
 
 class _CommitOrder:
@@ -274,13 +244,11 @@ class CdcPipeline:
                 # concurrent writer (another replicate, a compact)
                 # cannot swap the directory between this target read
                 # and the overwrite — the lost-update / stale-file-
-                # listing window. The lock is thread-reentrant, so
-                # overwrite()'s own acquisition nests freely.
-                from oracle_to_oracle_data_integration_pipeline_spark.sources.locking import (
-                    table_write_lock,
-                )
-
-                with table_write_lock(self.target.path(table)):
+                # listing window. The heal first puts back a table a
+                # killed swap left parked, so it is not taken for a
+                # first load.
+                with locking.table_write_lock(self.target.path(table)):
+                    locking.heal_swap(self.target.path(table))
                     if self.target.exists(table):
                         tgt = self.target.read(table)
                     else:

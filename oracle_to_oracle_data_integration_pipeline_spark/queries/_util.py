@@ -58,9 +58,10 @@ def tune(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for k, v in [
         ("spark.sql.ansi.enabled", "false"),
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark rejects by
-        # default; read as long and convert (µs truncation matches
-        # DuckDB's ns→µs handling).
+        # A source storing events.ts as parquet TIMESTAMP(NANOS) (the
+        # fixtures store timestamp[us]) is rejected by Spark by default;
+        # read it as long and let normalize_events_ts convert (µs
+        # truncation matches DuckDB's ns→µs handling).
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.adaptive.enabled", "true"),
     ]:

@@ -238,8 +238,9 @@ def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: the merged rows are exactly `merge_soft_delete`'s (the
     reference's Oracle MERGE semantics, scripts/03_cdc_etl.py:145-161)
     but published atomically — the last production-parity gap of the
-    directory-swap sink, closed without requiring delta-spark (the
-    DeltaMergeSink adapter covers deployments that have it).
+    directory-swap sink, closed without requiring delta-spark. A Delta
+    or Iceberg deployment runs merge_soft_delete's semantics as its
+    own MERGE INTO.
 
     Harness shape: tempdir per run, result materialized eagerly so the
     store can be cleaned up (the sql_ddl_roundtrip pattern); the merge

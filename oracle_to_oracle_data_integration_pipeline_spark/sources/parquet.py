@@ -27,6 +27,8 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from oracle_to_oracle_data_integration_pipeline_spark.sources.locking import swap_dir
+
 # Characters that make Spark glob a path (SparkHadoopUtil.isGlobPath).
 _GLOB_CHARS = frozenset("{}[]*?\\")
 
@@ -252,44 +254,35 @@ class ParquetSink:
         cluster_by: list[str] | None = None,
     ) -> int:
         """Rewrite a table directory to ``target_files`` right-sized
-        files (the maintenance job every append-heavy pipeline needs).
-
-        Writes to a sibling temp dir, then swaps via two renames under
-        the table's write lock (sources/locking.py). Single-WRITER is
-        enforced — a concurrent append between the renames would land in
-        the old directory and be rmtree'd. Readers are not locked: one
-        landing between the renames can see a briefly missing directory
-        (ENOENT — retry); a truly atomic dir swap needs
-        renameat2(RENAME_EXCHANGE) or manifest indirection (what a table
-        format's metadata commit provides). Returns the file count
-        before compaction.
+        files (the maintenance job every append-heavy pipeline needs),
+        swapped in by ``sources.locking.swap_dir`` — the same
+        stage-and-swap as the pipeline's merge overwrite, under the
+        same table lock, so a compact and a replicate serialize.
+        Returns the file count before compaction.
         """
-        from oracle_to_oracle_data_integration_pipeline_spark.sources.locking import (
-            table_write_lock,
-        )
-
         path = os.path.join(self.root, table)
-        part_dirs = [
-            d for d in os.listdir(path)
-            if "=" in d and os.path.isdir(os.path.join(path, d))
-        ]
-        if part_dirs:
-            # a flat rewrite would silently DROP the hive partitioning
-            # (and with it partition pruning on every future read)
-            raise ValueError(
-                f"{table} is hive-partitioned ({part_dirs[0]}, ...); "
-                "compact per partition or rewrite with "
-                "write_sized(partition_by=...) instead"
+        before: list[str] = []
+
+        def rewrite(staged: str) -> None:
+            # list and read INSIDE the lock, after the swap's heal: a
+            # merge swapping the directory after this listing would
+            # leave the compact writing from a stale (removed) file index
+            part_dirs = [
+                d for d in os.listdir(path)
+                if "=" in d and os.path.isdir(os.path.join(path, d))
+            ]
+            if part_dirs:
+                # a flat rewrite would silently DROP the hive partitioning
+                # (and with it partition pruning on every future read)
+                raise ValueError(
+                    f"{table} is hive-partitioned ({part_dirs[0]}, ...); "
+                    "compact per partition or rewrite with "
+                    "write_sized(partition_by=...) instead"
+                )
+            before.extend(
+                f for f in os.listdir(path)
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
             )
-        before = [
-            f for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-        tmp = path + "__compact_tmp"
-        with table_write_lock(path):
-            # read INSIDE the lock: a merge swapping the directory after
-            # this file listing would leave the compact writing from a
-            # stale (rmtree'd) file index
             df = spark.read.parquet(path)
             if cluster_by:
                 # recluster while rewriting: footer min/max ranges come
@@ -309,15 +302,7 @@ class ParquetSink:
                 # per-row-group min/max stats the clustering exists to
                 # narrow — secondary keys sort within each cluster key
                 df = df.sortWithinPartitions(*(cluster_by or []), *sort_within_by)
-            df.write.mode("overwrite").parquet(tmp)
-            old = path + "__compact_old"
-            os.rename(path, old)
-            try:
-                os.rename(tmp, path)
-            except Exception:
-                os.rename(old, path)  # roll back: the original stays live
-                raise
-            import shutil
+            df.write.mode("overwrite").parquet(staged)
 
-            shutil.rmtree(old)
+        swap_dir(path, rewrite)
         return len(before)

@@ -3,15 +3,17 @@
 
 The reference's production merge is atomic inside Oracle
 (`/root/reference/scripts/03_cdc_etl.py:145-161` MERGE). The engine's
-directory-swap target store (`sources/parquet.py` + `sources/
-locking.py`) is single-writer-correct but a reader racing the
-two-rename swap can observe ENOENT, and there is no history. This
+parquet target, replaced by one stage-and-swap per table
+(`sources/locking.py` ``swap_dir``), is single-writer-correct but a
+reader racing the swap's two renames can observe ENOENT, and there is
+no history. This
 store closes both gaps the way real table formats (Delta/Iceberg) do,
 reduced to the essential mechanism:
 
 - **data is immutable**: every commit writes a NEW version directory
   (``data/v{N}/``); nothing live is ever rewritten or deleted.
-- **a commit is one atomic pointer swap**: the manifest
+- **a commit is one atomic pointer swap** (``_publish``, shared by
+  commit, write-audit-publish and restore): the manifest
   (``_manifests/{N}.json``, listing the version's data path and
   lineage) is written first, then ``_latest`` is replaced via
   write-temp + ``os.replace`` — POSIX-atomic, so every reader sees
@@ -42,7 +44,6 @@ from __future__ import annotations
 
 import json
 import os
-import os as _os
 import re
 import shutil
 
@@ -66,6 +67,9 @@ class SnapshotStore:
 
     def _latest_path(self, table: str) -> str:
         return os.path.join(self._tdir(table), "_latest")
+
+    def _data_path(self, table: str, version: int) -> str:
+        return os.path.join(self._tdir(table), "data", f"v{version}")
 
     # -- read side ----------------------------------------------------
     def latest_version(self, table: str) -> int | None:
@@ -141,27 +145,35 @@ class SnapshotStore:
     def _commit_locked(self, df: DataFrame, table: str, operation: str) -> int:
         prev = self.latest_version(table)
         version = 0 if prev is None else prev + 1
-        tdir = self._tdir(table)
-        data_path = os.path.join(tdir, "data", f"v{version}")
-        os.makedirs(os.path.join(tdir, "_manifests"), exist_ok=True)
-        # CRASH SELF-HEAL: a previous commit that died between the data
-        # write and the pointer swap leaves an orphaned data/v{N} (and
-        # possibly a complete-but-unpublished manifest) at exactly this
-        # version — without cleanup the errorifexists write below would
-        # fail FOREVER and wedge the table. Under the write lock,
-        # anything beyond the published pointer is by definition
-        # uncommitted garbage: no manifest <= prev can reference
-        # data/v{version} (data dirs are created only by the commit of
-        # that version), so removal is safe.
-        if os.path.exists(data_path):
-            shutil.rmtree(data_path)
-        stale_manifest = self._manifest_path(table, version)
-        if os.path.exists(stale_manifest):
-            os.remove(stale_manifest)
-        # 1. immutable data for the new version
-        df.write.mode("errorifexists").parquet(data_path)
-        # 2. manifest (readable only once fully written — written to a
-        #    temp name then renamed, same discipline as the pointer)
+        data_path = self._data_path(table, version)
+        self._heal_unpublished(table, version)
+        df.write.mode("errorifexists").parquet(data_path)  # immutable data
+        return self._publish(table, version, prev, operation, data_path)
+
+    def _heal_unpublished(self, table: str, version: int) -> None:
+        """CRASH SELF-HEAL: a commit or WAP run that died between its
+        data write and the pointer swap leaves an orphaned
+        ``data/v{N}``, ``_staging/v{N}`` and/or a complete-but-
+        unpublished manifest at exactly the next version — without
+        cleanup the errorifexists write would fail FOREVER and wedge
+        the table. Called under the write lock, where anything beyond
+        the published pointer is uncommitted garbage: no manifest <=
+        prev can reference ``data/v{N}`` (data dirs are created only by
+        the commit of that version), so removal is safe."""
+        staged = os.path.join(self._tdir(table), "_staging", f"v{version}")
+        for stale in (staged, self._data_path(table, version)):
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
+        if os.path.exists(self._manifest_path(table, version)):
+            os.remove(self._manifest_path(table, version))
+
+    def _publish(
+        self, table: str, version: int, prev: int | None, operation: str, data_path: str
+    ) -> int:
+        """THE commit of ``version``: its manifest, then one atomic
+        pointer swap of ``_latest``. Each file is written to a temp
+        name and ``os.replace``d, so readers only ever see whole
+        files."""
         m = {
             "table": table,
             "version": version,
@@ -170,15 +182,11 @@ class SnapshotStore:
             "data_path": data_path,
         }
         mpath = self._manifest_path(table, version)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, mpath)
-        # 3. THE commit: one atomic pointer swap
-        ltmp = self._latest_path(table) + ".tmp"
-        with open(ltmp, "w") as f:
-            f.write(str(version))
-        os.replace(ltmp, self._latest_path(table))
+        os.makedirs(os.path.dirname(mpath), exist_ok=True)
+        for path, text in ((mpath, json.dumps(m)), (self._latest_path(table), str(version))):
+            with open(path + ".tmp", "w") as f:
+                f.write(text)
+            os.replace(path + ".tmp", path)
         return version
 
     def merge(
@@ -335,66 +343,36 @@ class SnapshotStore:
 
         Returns (published: bool, version | None, {rule: violations}).
         """
-        import shutil as _shutil
-
-        from pyspark.sql import functions as F
-
         with table_write_lock(self._tdir(table)):
             prev = self.latest_version(table)
             version = 0 if prev is None else prev + 1
             tdir = self._tdir(table)
-            staged = _os.path.join(tdir, "_staging", f"v{version}")
-            # crash self-heal (same argument as _commit_locked): a WAP
-            # run that died mid-stage or mid-publish leaves a staged
-            # and/or data dir at this unpublished version — clear both
-            # or the errorifexists stage / directory os.replace wedges
-            data_path = _os.path.join(tdir, "data", f"v{version}")
-            for stale in (staged, data_path):
-                if _os.path.exists(stale):
-                    _shutil.rmtree(stale)
-            stale_manifest = self._manifest_path(table, version)
-            if _os.path.exists(stale_manifest):
-                _os.remove(stale_manifest)
+            staged = os.path.join(tdir, "_staging", f"v{version}")
+            data_path = self._data_path(table, version)
+            self._heal_unpublished(table, version)
             df.write.mode("errorifexists").parquet(staged)
             back = self.spark.read.parquet(staged)
             counts = {
                 name: back.where(cond).count() for name, cond in rules.items()
             }
             if any(counts.values()):
-                qdir = _os.path.join(tdir, "_quarantine")
-                _os.makedirs(qdir, exist_ok=True)
+                qdir = os.path.join(tdir, "_quarantine")
+                os.makedirs(qdir, exist_ok=True)
                 # A rejected batch does NOT consume the version number,
                 # so a second rejection at the same version must land in
                 # a fresh directory — probe for a free attempt-suffixed
                 # name instead of letting shutil.move nest into an
                 # existing destination and mix forensic evidence.
-                dest = _os.path.join(qdir, f"v{version}-rejected")
+                dest = os.path.join(qdir, f"v{version}-rejected")
                 attempt = 1
-                while _os.path.exists(dest):
-                    dest = _os.path.join(qdir, f"v{version}-rejected-{attempt}")
+                while os.path.exists(dest):
+                    dest = os.path.join(qdir, f"v{version}-rejected-{attempt}")
                     attempt += 1
-                _shutil.move(staged, dest)
+                shutil.move(staged, dest)
                 return False, None, counts
-            # data_path computed once with the self-heal block above —
-            # heal and publish must always agree on the directory
-            _os.makedirs(_os.path.dirname(data_path), exist_ok=True)
-            _os.replace(staged, data_path)
-            _os.makedirs(_os.path.join(tdir, "_manifests"), exist_ok=True)
-            m = {
-                "table": table,
-                "version": version,
-                "parent": prev,
-                "operation": "wap_publish",
-                "data_path": data_path,
-            }
-            mpath = self._manifest_path(table, version)
-            with open(mpath + ".tmp", "w") as f:
-                json.dump(m, f)
-            _os.replace(mpath + ".tmp", mpath)
-            with open(self._latest_path(table) + ".tmp", "w") as f:
-                f.write(str(version))
-            _os.replace(self._latest_path(table) + ".tmp", self._latest_path(table))
-            return True, version, counts
+            os.makedirs(os.path.dirname(data_path), exist_ok=True)
+            os.replace(staged, data_path)
+            return True, self._publish(table, version, prev, "wap_publish", data_path), counts
 
     def restore(self, table: str, version: int) -> int:
         """RESTORE: make a retained historical version current again —
@@ -408,20 +386,4 @@ class SnapshotStore:
             src = self.manifest(table, version)  # raises if vacuumed away
             prev = self.latest_version(table)
             new_v = 0 if prev is None else prev + 1
-            m = {
-                "table": table,
-                "version": new_v,
-                "parent": prev,
-                "operation": f"restore(v{version})",
-                "data_path": src["data_path"],
-            }
-            mpath = self._manifest_path(table, new_v)
-            with open(mpath + ".tmp", "w") as f:
-                json.dump(m, f)
-            _os.replace(mpath + ".tmp", mpath)
-            with open(self._latest_path(table) + ".tmp", "w") as f:
-                f.write(str(new_v))
-            _os.replace(
-                self._latest_path(table) + ".tmp", self._latest_path(table)
-            )
-            return new_v
+            return self._publish(table, new_v, prev, f"restore(v{version})", src["data_path"])

@@ -16,8 +16,10 @@ both execution modes. ``availableNow`` trigger drains what exists and
 stops (the testable mode); continuous deployment drops the trigger.
 
 Scale: the file source lists incrementally (maxFilesPerTrigger bounds
-batch size); each micro-batch merge is one shuffle keyed by PK. The
-target store swap is atomic per batch; a crash between write and
+batch size); each micro-batch merge is one shuffle keyed by PK. Each
+batch replaces the target through ``ParquetTargetStore.overwrite`` —
+the one stage-and-swap (``sources.locking.swap_dir``), whose heal puts
+back a table a killed swap left parked; a crash between write and
 checkpoint commit replays the batch, which the idempotent merge
 absorbs (same at-least-once + idempotency contract as the reference,
 `/root/reference/README.md:287`).
@@ -29,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import latest_per_key, merge_soft_delete
 from oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline import ParquetTargetStore
+from oracle_to_oracle_data_integration_pipeline_spark.sources import locking
 
 
 def run_cdc_stream(
@@ -58,9 +61,13 @@ def run_cdc_stream(
         if batch_df.isEmpty():
             return
         delta = latest_per_key(batch_df, pk)
-        tgt = target.read(table) if target.exists(table) else batch_df.limit(0)
-        merged = merge_soft_delete(tgt, delta, pk)
-        target.overwrite(table, merged.df)
+        # same critical section as CdcPipeline.replicate_table: the
+        # target read and the swap under one lock, after the heal
+        with locking.table_write_lock(target.path(table)):
+            locking.heal_swap(target.path(table))
+            tgt = target.read(table) if target.exists(table) else batch_df.limit(0)
+            merged = merge_soft_delete(tgt, delta, pk)
+            target.overwrite(table, merged.df)
 
     writer = (
         stream.writeStream.foreachBatch(merge_batch)

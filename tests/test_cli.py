@@ -121,6 +121,25 @@ def test_compact_isolates_broken_table(spark, tmp_path):
     assert spark.read.parquet(f"{tgt}/documents").count() == 1
 
 
+def test_compact_skips_and_sweeps_staging_siblings(spark, tmp_path):
+    """A staged ``<table>.tmp-*`` copy left by a killed swap is not a
+    table: compact neither lists it nor leaves it behind."""
+    import shutil
+
+    src = str(tmp_path / "src")
+    tgt = str(tmp_path / "tgt")
+    os.makedirs(src)
+    _write_cdc_source(spark, src)
+    assert main(["replicate", "--source", src, "--target", tgt,
+                 "--state", str(tmp_path / "wm")]) == 0
+    shutil.copytree(f"{tgt}/events", f"{tgt}/events.tmp-0badc0de")
+    assert main(["compact", "--target", tgt, "--files", "1"]) == 0
+    assert not [n for n in os.listdir(tgt) if n.startswith("events.") and n != "events.lock"]
+    parts = [f for f in os.listdir(f"{tgt}/events") if f.endswith(".parquet")]
+    assert len(parts) == 1
+    assert spark.read.parquet(f"{tgt}/events").count() == 2
+
+
 def test_validate_checksum_catches_content_drift(spark, tmp_path, capsys):
     """--checksum upgrades count reconciliation to digest compare:
     counts equal but one value drifted on the target -> MISMATCH, and

@@ -70,93 +70,3 @@ def test_unknown_strategy_raises(spark):
     df = spark.createDataFrame([], SCHEMA)
     with pytest.raises(ValueError, match="unknown merge strategy"):
         merge_soft_delete(df, df, ["id"], strategy="nope")
-
-
-# -- transactional MERGE INTO sink (sources/merge_sink.py) -------------
-
-
-def test_merge_into_sql_structure():
-    """The rendered MERGE must carry the exact soft-delete semantics:
-    composite-PK ON clause, SET list = every non-PK column (including
-    is_deleted), the tombstone insert gate, and all identifiers
-    quoted."""
-    from oracle_to_oracle_data_integration_pipeline_spark.sources.merge_sink import (
-        build_merge_into_sql,
-    )
-
-    sql = build_merge_into_sql(
-        "tgt", "src", ["id", "part"],
-        ["id", "part", "val", "updated_at", "is_deleted"],
-    )
-    assert "ON t.`id` = s.`id` AND t.`part` = s.`part`" in sql
-    # every non-PK column updated, PK columns never
-    assert "t.`val` = s.`val`" in sql and "t.`is_deleted` = s.`is_deleted`" in sql
-    assert "t.`id` = s.`id`," not in sql  # id only in ON, not SET
-    # tombstone gate: soft deletes for unseen keys must not insert
-    assert "WHEN NOT MATCHED AND s.`is_deleted` = 'N'" in sql
-    assert "INSERT (`id`, `part`, `val`, `updated_at`, `is_deleted`)" in sql
-    # no NOT MATCHED BY SOURCE: untouched target rows pass through
-    assert "BY SOURCE" not in sql
-
-
-def test_merge_into_sql_validates_inputs():
-    from oracle_to_oracle_data_integration_pipeline_spark.sources.merge_sink import (
-        build_merge_into_sql,
-    )
-
-    with pytest.raises(ValueError, match="at least one key"):
-        build_merge_into_sql("t", "s", [], ["id", "is_deleted"])
-    with pytest.raises(ValueError, match="missing"):
-        build_merge_into_sql("t", "s", ["id"], ["val", "is_deleted"])
-
-
-def test_delta_merge_sink_matches_merge_soft_delete(spark, tmp_path):
-    """Semantic pin between the transactional path and the DataFrame
-    path: same mixed batch, identical surviving rows and attribution.
-    Skips when delta-spark is absent (this container has no network /
-    no installs — the adapter is for real deployments)."""
-    pytest.importorskip("delta")
-    from oracle_to_oracle_data_integration_pipeline_spark.sources.merge_sink import (
-        DeltaMergeSink,
-        delta_available,
-    )
-
-    if not delta_available(spark):
-        pytest.skip("Delta SQL extension not configured in this session")
-
-    T1, T2 = TS(2024, 1, 1), TS(2024, 1, 2)
-    target = spark.createDataFrame(
-        [(1, "a", T1, None, "N"), (2, "b", T1, None, "N"), (3, "c", T1, None, "N")],
-        SCHEMA,
-    )
-    delta = spark.createDataFrame(
-        [
-            (1, "a2", T1, T2, "N"),   # update
-            (3, "c", T1, T2, "Y"),    # soft delete existing
-            (5, "e", T2, None, "N"),  # insert
-            (98, "x", T2, T2, "Y"),   # dropped delete
-        ],
-        SCHEMA,
-    )
-    sink = DeltaMergeSink(spark, str(tmp_path))
-    sink.write(target, "t", mode="overwrite")
-    stats = sink.merge(delta, "t", ["id"])
-
-    expected = merge_soft_delete(target, delta, ["id"], strategy="shuffle")
-    got = {r["id"]: (r["val"], r["is_deleted"]) for r in sink.read("t").collect()}
-    want = {r["id"]: (r["val"], r["is_deleted"]) for r in expected.df.collect()}
-    assert got == want
-    es = expected.stats()
-    assert (stats.updated, stats.inserted) == (es.updated, es.inserted)
-
-
-def test_delta_merge_sink_unavailable_raises(spark):
-    from oracle_to_oracle_data_integration_pipeline_spark.sources.merge_sink import (
-        DeltaMergeSink,
-        delta_available,
-    )
-
-    if delta_available(spark):
-        pytest.skip("delta IS available here; the error path can't fire")
-    with pytest.raises(RuntimeError, match="delta-spark is not available"):
-        DeltaMergeSink(spark, "/tmp/x")

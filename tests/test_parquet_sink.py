@@ -65,6 +65,45 @@ def test_compact_refuses_partitioned_table(spark, tmp_path):
         sink.compact(spark, "pp", target_files=1)
 
 
+def _fragmented(spark, tmp_path, name="c"):
+    df = spark.range(5_000).withColumn("v", F.col("id") % 7)
+    df.repartition(16).write.mode("overwrite").parquet(str(tmp_path / name))
+    return sum(range(5_000))
+
+
+def test_failed_compact_leaves_no_staged_copy(spark, tmp_path, monkeypatch):
+    """A rewrite that fails mid-write removes its staged copy; the
+    table still reads as before."""
+    import pytest as _pytest
+
+    from oracle_to_oracle_data_integration_pipeline_spark.operators import scale
+
+    total = _fragmented(spark, tmp_path)
+    monkeypatch.setattr(
+        scale,
+        "cluster_by_range",
+        lambda df, cols, num_files: df.withColumn("boom", F.raise_error(F.lit("planted write failure"))),
+    )
+    sink = ParquetSink(str(tmp_path))
+    with _pytest.raises(Exception, match="planted write failure"):
+        sink.compact(spark, "c", target_files=2, cluster_by=["id"])
+    assert [n for n in os.listdir(tmp_path) if n.startswith("c.") or n.startswith("c__")] == ["c.lock"]
+    assert len(_files(str(tmp_path / "c"))) == 16
+    assert spark.read.parquet(str(tmp_path / "c")).agg(F.sum("id")).collect()[0][0] == total
+
+
+def test_compact_sweeps_a_stale_parked_copy(spark, tmp_path):
+    """A ``c.old-*`` left by a swap killed before its cleanup is gone
+    after the next compact, which still rewrites the live table."""
+    total = _fragmented(spark, tmp_path)
+    os.makedirs(tmp_path / "c.old-0123abcd")
+    (tmp_path / "c.old-0123abcd" / "part-00000.parquet").write_bytes(b"stale")
+    ParquetSink(str(tmp_path)).compact(spark, "c", target_files=2)
+    assert sorted(n for n in os.listdir(tmp_path) if n.startswith("c.")) == ["c.lock"]
+    assert len(_files(str(tmp_path / "c"))) == 2
+    assert spark.read.parquet(str(tmp_path / "c")).agg(F.sum("id")).collect()[0][0] == total
+
+
 def test_table_write_lock_reentrant_same_thread(tmp_path):
     """replicate_table holds the lock across read->merge->swap and
     overwrite() re-acquires inside it: same-thread nesting must not

@@ -224,6 +224,24 @@ def test_failed_overwrite_leaves_no_staged_dir(spark, tmp_path):
     assert sorted(r.id for r in target.read("t1").collect()) == [0, 1, 2]
 
 
+def test_crash_between_swap_renames_restores_the_table(spark, tmp_path):
+    """A process killed between the swap's two renames leaves the live
+    table parked at ``<table>.old-*`` and no table at all. The next run
+    puts it back and merges into it; it must not take the missing
+    target for a first load and publish the delta alone."""
+    rows = [(i, f"v{i}", T1, None, "N") for i in range(1, 6)]
+    cat, pipe = build(spark, tmp_path, rows)
+    pipe.run()
+    cat.put("t1", spark.createDataFrame(rows + [(6, "v6", T2, None, "N")], SCHEMA), pk=["id"])
+    live = pipe.target.path("t1")
+    os.rename(live, f"{live}.old-deadbeef")
+    rep = pipe.run()
+    [res] = [r for r in rep.results if r.table == "t1"]
+    assert (res.status, res.inserted) == ("replicated", 1)
+    assert sorted(target_map(pipe)) == [1, 2, 3, 4, 5, 6]
+    assert [n for n in os.listdir(pipe.target.root) if n.startswith("t1.")] == ["t1.lock"]
+
+
 def _state(pipe, tables):
     """Each table's target rows and watermark."""
     return {t: (sorted(tuple(r) for r in pipe.target.read(t).collect()), pipe.watermarks.get(t)) for t in tables}

@@ -140,3 +140,23 @@ def test_cdc_stream_merges_batches(spark, tmp_path):
     run_cdc_stream(spark, src, target, "t1", ["id"], ckpt)
     got2 = {r["id"]: (r["val"], r["is_deleted"]) for r in target.read("t1").collect()}
     assert got2 == got
+
+
+def test_cdc_stream_restores_a_parked_target(spark, tmp_path):
+    """A micro-batch after a swap killed between its two renames merges
+    into the parked table, not into an empty one."""
+    import os
+
+    src = f"{tmp_path}/cdc_src"
+    ckpt = f"{tmp_path}/ckpt"
+    target = ParquetTargetStore(spark, f"{tmp_path}/target")
+    T1, T2 = TS(2024, 1, 1), TS(2024, 1, 2)
+    rows = [(i, "a", T1, None, "N") for i in range(1, 6)]
+    spark.createDataFrame(rows, CDC_SCHEMA).coalesce(1).write.parquet(src)
+    run_cdc_stream(spark, src, target, "t1", ["id"], ckpt)
+    os.rename(target.path("t1"), target.path("t1") + ".old-deadbeef")
+    batch2 = spark.createDataFrame([(6, "b", T2, None, "N")], CDC_SCHEMA)
+    batch2.coalesce(1).write.mode("append").parquet(src)
+    run_cdc_stream(spark, src, target, "t1", ["id"], ckpt)
+    assert sorted(r["id"] for r in target.read("t1").collect()) == [1, 2, 3, 4, 5, 6]
+    assert [n for n in os.listdir(target.root) if n.startswith("t1.")] == ["t1.lock"]
