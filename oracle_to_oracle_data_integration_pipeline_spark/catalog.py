@@ -199,17 +199,19 @@ class Catalog:
             meta.schema = footer_schema(self.spark, meta.path)
         return meta.schema
 
-    def load(self, name: str) -> DataFrame:
+    def load(self, name: str, schema: T.StructType | None = None) -> DataFrame:
         """DataFrame for a registered table (lazy parquet scan; Catalyst
         handles pushdown/pruning — nothing is materialized here).
 
         A path table gets a fresh reader, and with it a fresh file
         listing, on every call: a reader kept across calls keeps its
-        file index and misses part files added since."""
+        file index and misses part files added since. Its schema is
+        ``schema`` when the caller has just read it with ``get_schema``
+        (no second footer read), else read fresh."""
         key = name.lower()
         if key in self._frames:
             return self._frames[key]
-        return self.spark.read.schema(self.get_schema(name)).parquet(self._tables[key].path)
+        return self.spark.read.schema(schema or self.get_schema(name)).parquet(self._tables[key].path)
 
     def put(self, name: str, df: DataFrame, pk: list[str] | None = None) -> None:
         """Register an in-memory DataFrame as a table (used by tests and

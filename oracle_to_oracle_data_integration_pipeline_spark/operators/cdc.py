@@ -108,7 +108,9 @@ def latest_per_key(df: DataFrame, pk: list[str], order_cols: list[Column] | None
     deterministic tiebreak column when change times can collide.
     One shuffle on ``pk`` — the same partitioning the merge join needs,
     so Catalyst reuses the exchange when composed with
-    ``merge_soft_delete``.
+    ``merge_soft_delete``. Over a single partition (``coalesce(1)``,
+    for a delta known to be small) there is no shuffle at all: one
+    partition already meets the window's clustering.
     """
     order = order_cols or [change_ts_col(created, updated).desc()]
     w = Window.partitionBy(*pk).orderBy(*order)
@@ -122,13 +124,17 @@ def latest_per_key(df: DataFrame, pk: list[str], order_cols: list[Column] | None
 @dataclass
 class MergeStats:
     """Exact attribution, from the merge join itself (not table-count
-    deltas — see module docstring)."""
+    deltas — see module docstring). ``delta_rows`` counts every row of
+    the delta the merge read, so 0 means the delta was empty: u+i+x
+    cannot tell, because a new key whose ``is_deleted`` is NULL
+    neither inserts nor counts as a dropped delete."""
 
     updated: int
     inserted: int
     dropped_deletes: int
     # gated soft-deletes included; None for a delta without CDC columns
     max_change_ts: datetime | None = None
+    delta_rows: int = 0
 
     @property
     def staged(self) -> int:
@@ -139,7 +145,9 @@ class MergeStats:
 class MergeResult:
     """``df`` is the merged table. Its plan observes the merge join
     below the insert gate, so the first action that runs ``df`` in full
-    (the target write) also fills ``observation``."""
+    (the target write) also fills ``observation``: the u/i/x counts, the
+    delta's row count and its max change time, with no action of its
+    own."""
 
     df: DataFrame
     observation: Observation
@@ -161,20 +169,32 @@ class MergeResult:
                 self.df.write.mode("overwrite").format("noop").save()
         m = self.observation.get
         return MergeStats(updated=m["u"], inserted=m["i"], dropped_deletes=m["x"],
-                          max_change_ts=m.get("max_ts"))
+                          max_change_ts=m.get("max_ts"), delta_rows=m["n"])
 
 
-def _attribution(t_present: Column, d_present: Column, deleted: Column,
-                 change_ts: Column | None = None) -> list[Column]:
+def _q(name: str) -> str:
+    """Backtick-quote a column name for ``selectExpr``/``where`` text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _attribution(t_present: Column, d_present: Column, deleted: Column) -> list[Column]:
     """Aggregates over a merge join: delta rows that update a target
     row, insert, or are dropped by the insert gate (a soft-delete of a
-    key the target never saw), and the delta's max change time."""
+    key the target never saw)."""
     new = d_present & ~t_present
     return [
         F.count_if(d_present & t_present).alias("u"),
         F.count_if(new & (deleted == "N")).alias("i"),
         F.count_if(new & (deleted == "Y")).alias("x"),
-    ] + ([] if change_ts is None else [F.max(change_ts).alias("max_ts")])
+    ]
+
+
+def _observed(t_present: Column, d_present: Column, deleted: Column,
+              change_ts: Column | None) -> list[Column]:
+    """What a merge observes: the attribution, the delta's row count
+    and, with CDC columns, its max change time."""
+    return _attribution(t_present, d_present, deleted) + [F.count_if(d_present).alias("n")] + (
+        [] if change_ts is None else [F.max(change_ts).alias("max_ts")])
 
 
 def _align_schemas(target: DataFrame, delta: DataFrame) -> tuple[DataFrame, DataFrame, list[str]]:
@@ -207,7 +227,7 @@ def _align_schemas(target: DataFrame, delta: DataFrame) -> tuple[DataFrame, Data
             delta = delta.withColumn(name, F.lit(None).cast(t_types[lc]))
             backfilled.append(name)
     # delta projected into the (evolved) target column order
-    delta = delta.select(*target.columns)
+    delta = delta.selectExpr(*map(_q, target.columns))
     return target, delta, backfilled
 
 
@@ -217,34 +237,30 @@ def _merge_broadcast_delta(
 ) -> MergeResult:
     """No-target-shuffle merge: see ``merge_soft_delete`` docstring."""
     out_cols = target.columns
-    keys = delta.select(*pk)
-    # target-side passes: broadcast the (small) delta keys
-    untouched = target.join(F.broadcast(keys), pk, "left_anti")
+    # target-side passes: broadcast the (small) delta keys. The explicit
+    # non-null filter (a null key matches nothing) makes the anti and
+    # semi joins plan the same broadcast, so Spark builds it once over
+    # an uncached delta; over a cached one it still builds it twice.
+    keys = delta.selectExpr(*map(_q, pk)).where(" AND ".join(f"{_q(k)} IS NOT NULL" for k in pk))
+    untouched = target.join(F.broadcast(keys), pk, "left_anti").selectExpr(*map(_q, out_cols))
     # matched keys also carry the target's values for columns the delta
     # does not stage (schema-drop case) — still ≤|delta| rows, so the
     # broadcast stays delta-sized
-    matched_keys = target.join(F.broadcast(keys), pk, "left_semi").select(
-        *pk, *[F.col(c).alias(f"__tb_{c}__") for c in backfilled]
+    matched_keys = target.join(F.broadcast(keys), pk, "left_semi").selectExpr(
+        *map(_q, pk), *[f"{_q(c)} AS {_q(f'__tb_{c}__')}" for c in backfilled], "1 AS __m__"
     )
     # resolve delta rows against the (≤|delta|) matched-key set
-    d_flagged = delta.join(
-        F.broadcast(matched_keys.withColumn("__m__", F.lit(1))), pk, "left"
-    )
+    d_flagged = delta.join(F.broadcast(matched_keys), pk, "left")
     matched = F.col("__m__").isNotNull()
     obs = Observation()  # below the insert gate: gated soft-deletes count
-    d_flagged = d_flagged.observe(obs, *_attribution(matched, F.lit(True), F.col(deleted_col), change_ts))
-    kept = d_flagged.filter(
-        matched | (F.col(deleted_col) == "N")
-    ).select(
-        [
-            F.when(matched, F.col(f"__tb_{c}__")).otherwise(F.col(c)).alias(c)
-            if c in backfilled
-            else F.col(c)
-            for c in out_cols
-        ]
-    )
-    merged = untouched.select(*out_cols).unionByName(kept)
-    return MergeResult(df=merged, observation=obs)
+    d_flagged = d_flagged.observe(obs, *_observed(matched, F.lit(True), F.col(deleted_col), change_ts))
+    kept = d_flagged.where(f"__m__ IS NOT NULL OR {_q(deleted_col)} = 'N'").selectExpr(*[
+        f"CASE WHEN __m__ IS NOT NULL THEN {_q(f'__tb_{c}__')} ELSE {_q(c)} END AS {_q(c)}"
+        if c in backfilled
+        else _q(c)
+        for c in out_cols
+    ])
+    return MergeResult(df=untouched.unionByName(kept), observation=obs)
 
 
 def merge_attribution(target: DataFrame, delta: DataFrame, pk: list[str],
@@ -264,8 +280,8 @@ def merge_attribution(target: DataFrame, delta: DataFrame, pk: list[str],
 def _tagged_join(target: DataFrame, delta: DataFrame, pk: list[str]) -> DataFrame:
     """Full-outer join on ``pk``, every column tagged ``__t_c__`` /
     ``__d_c__`` so the joined plan keeps unambiguous references."""
-    t = target.select([F.col(c).alias(f"__t_{c}__") for c in target.columns])
-    d = delta.select([F.col(c).alias(f"__d_{c}__") for c in delta.columns])
+    t = target.selectExpr(*[f"{_q(c)} AS {_q(f'__t_{c}__')}" for c in target.columns])
+    d = delta.selectExpr(*[f"{_q(c)} AS {_q(f'__d_{c}__')}" for c in delta.columns])
     cond = None
     for k in pk:
         clause = F.col(f"__t_{k}__") == F.col(f"__d_{k}__")
@@ -306,16 +322,21 @@ def merge_soft_delete(
       into target-side anti/semi joins against the broadcast delta:
       the target is scanned but NEVER shuffled, and the surviving
       delta rows are resolved against the (tiny) matched-key set.
-      Cost: ~2 target scans, 0 target shuffles vs 1 scan + 1 full
+      Cost: 2 target scans, 0 target shuffles vs 1 scan + 1 full
       shuffle — scans are far cheaper than a cluster-wide shuffle of
-      the same bytes.
+      the same bytes — and 2 broadcasts: the delta keys, built once
+      and reused by the anti and semi joins (unless the delta is
+      cached), and the matched-key set. So 3 jobs with the write. A
+      delta deduplicated in one partition (``latest_per_key`` over
+      ``coalesce(1)``) adds no exchange either.
 
     ``dedup_delta=True`` collapses multi-change batches via
     ``latest_per_key`` first. Column order of the output = target
     column order.
 
     Both strategies observe the join below the insert gate, so the
-    write of ``df`` also fills the u/i/x counts and max change time.
+    write of ``df`` also fills the u/i/x counts, the delta's row count
+    and its max change time.
     """
     if not pk:
         raise ValueError("merge requires a non-empty primary key")
@@ -337,17 +358,16 @@ def merge_soft_delete(
     change_ts = change_ts_col(f"__d_{created}__", f"__d_{updated}__") if has_ts else None
     obs = Observation()  # below the insert gate: gated soft-deletes count
     joined = joined.observe(
-        obs, *_attribution(t_present, d_present, F.col(f"__d_{deleted_col}__"), change_ts))
-    resolved = joined.filter(
-        t_present | (F.col(f"__d_{deleted_col}__") == "N")  # insert gate
-    ).select(
-        [
-            # backfilled = column the delta doesn't stage: matched rows
-            # keep the target value (reference MERGE SET-list scope)
-            F.when(t_present, F.col(f"__t_{c}__")).otherwise(F.col(f"__d_{c}__")).alias(c)
-            if c in backfilled
-            else F.when(d_present, F.col(f"__d_{c}__")).otherwise(F.col(f"__t_{c}__")).alias(c)
-            for c in out_cols
-        ]
-    )
+        obs, *_observed(t_present, d_present, F.col(f"__d_{deleted_col}__"), change_ts))
+    t_key, d_key = _q(f"__t_{pk[0]}__"), _q(f"__d_{pk[0]}__")
+    resolved = joined.where(
+        f"{t_key} IS NOT NULL OR {_q(f'__d_{deleted_col}__')} = 'N'"  # insert gate
+    ).selectExpr(*[
+        # backfilled = column the delta doesn't stage: matched rows
+        # keep the target value (reference MERGE SET-list scope)
+        f"CASE WHEN {t_key} IS NOT NULL THEN {_q(f'__t_{c}__')} ELSE {_q(f'__d_{c}__')} END AS {_q(c)}"
+        if c in backfilled
+        else f"CASE WHEN {d_key} IS NOT NULL THEN {_q(f'__d_{c}__')} ELSE {_q(f'__t_{c}__')} END AS {_q(c)}"
+        for c in out_cols
+    ])
     return MergeResult(df=resolved, observation=obs)

@@ -13,16 +13,23 @@ full JDBC read then filter derived column   → pushdown-safe base-column
 count() to gate empty delta                 → the source's parquet footers
                                               on the driver (no Spark job):
                                               no row group newer than the
-                                              watermark → empty_delta; else
-                                              isEmpty() on the cached delta
+                                              watermark → empty_delta; a
+                                              row group whose max is newer
+                                              proves a row → no gate job;
+                                              else isEmpty() on the cached
+                                              delta
 stage to STG_ table + Oracle MERGE          → merge_soft_delete (one
-                                              shuffle join; no staging
-                                              copy — the DataFrame IS
-                                              the stage)
-COUNT(*) attribution; watermark =          → u/i/x and max(change_ts)
-MAX(GREATEST(...)) recompute                  observed on the merge join
-                                              by the target write (the
-                                              reference re-scans 3×)
+                                              shuffle join, or broadcast
+                                              joins for a small delta; no
+                                              staging copy — the DataFrame
+                                              IS the stage)
+COUNT(*) attribution; watermark =          → u/i/x, the delta's row count
+MAX(GREATEST(...)) recompute                  and max(change_ts) observed
+                                              on the merge join by the
+                                              target write (the reference
+                                              re-scans 3×); a zero row
+                                              count discards the staged
+                                              write → empty_delta
 per-table try/except, summary, exit code    → RunReport with per-table
                                               error isolation
 
@@ -38,9 +45,12 @@ broadcast. Metadata costs no Spark job: schemas come from parquet
 footers (``sources.parquet.footer_schema``), and a table whose every
 row group's ``created_at``/``updated_at`` max is at or below the
 watermark ends ``empty_delta`` from its footers alone
-(``newer_rows_bound``). The rows of the row groups that may hold newer
+(``newer_rows``). The rows of the row groups that may hold newer
 changes bound the delta, so a bound under ``broadcast_delta_max_rows``
-picks the broadcast merge without a ``count()``. The gate reads one
+picks the broadcast merge without a ``count()``; when a row group's
+statistics also prove a newer row, the merge's write is the table's
+only query (3 jobs: two broadcasts and the write) and the delta is
+neither cached nor gated. The gate reads one
 footer per data file per cycle, fresh each time; at millions of files
 per-file statistics belong in a manifest written with the data, not in
 a listing plus a footer read per file. Target storage here is plain
@@ -58,7 +68,6 @@ import threading
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -76,7 +85,7 @@ from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import
 from oracle_to_oracle_data_integration_pipeline_spark.plans.schema_tools import validate_cdc_columns
 from oracle_to_oracle_data_integration_pipeline_spark.plans.topo import topo_depths, topo_sort_tables
 from oracle_to_oracle_data_integration_pipeline_spark.sources import locking
-from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import footer_schema, newer_rows_bound
+from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import NewerRows, footer_schema, newer_rows
 
 
 @dataclass
@@ -160,6 +169,10 @@ class ParquetTargetStore:
         locking.swap_dir(self.path(table), df.write.mode("overwrite").parquet, before_swap)
 
 
+class _EmptyDelta(Exception):
+    """The merge's write observed no delta row: discard the staged copy."""
+
+
 class _CommitOrder:
     """FK commit order of one parallel run. ``wait(table)`` blocks until
     every table of a lower depth has been released: committed with its
@@ -223,68 +236,47 @@ class CdcPipeline:
             validate_cdc_columns(schema, table)  # 03_cdc_etl.py:270-274
 
             last_ts = self.watermarks.get(table)
-            # Skip-only gate: the footers may prove the delta empty, at
-            # no Spark job; what they cannot prove, Spark checks below.
-            bound = self._delta_bound(table, schema, last_ts)
-            if bound == 0:
+            # The footers may prove the delta empty, at no Spark job, or
+            # prove a row newer than the watermark and bound the delta;
+            # what they cannot tell, Spark checks below.
+            rows = self._newer_rows(table, schema, last_ts)
+            if rows is not None and rows.bound == 0:
                 return TableResult(table, "empty_delta")
 
-            src = self.source.load(table)
+            src = self.source.load(table, schema=schema)
             pred = delta_predicate(last_ts)
             delta = src.filter(pred) if pred is not None else src
-            # One materialization, reused for the emptiness gate, the
-            # strategy count and the merge (the reference scans 3×).
-            delta = delta.cache()
+            bounded = rows is not None and rows.bound <= self.broadcast_delta_max_rows
+            gated = rows is None or not rows.proven
+            counted = self.merge_strategy == "auto" and last_ts is not None and not bounded
+            # Cache only when a second action reads the delta: the
+            # isEmpty gate of an unproven delta, or auto's count of one
+            # the footers do not bound under the broadcast limit.
+            # Otherwise the merge's write is the only query.
+            cached = gated or counted
+            if cached:
+                delta = delta.cache()
             try:
-                if delta.isEmpty():  # cheap gate, not a full count()
+                if gated and delta.isEmpty():  # cheap gate, not a full count()
                     return TableResult(table, "empty_delta")
-
-                delta_clean = latest_per_key(delta, pk)
-                # The table lock covers the whole read→merge→swap: a
-                # concurrent writer (another replicate, a compact)
-                # cannot swap the directory between this target read
-                # and the overwrite — the lost-update / stale-file-
-                # listing window. The heal first puts back a table a
-                # killed swap left parked, so it is not taken for a
-                # first load.
-                with locking.table_write_lock(self.target.path(table)):
-                    locking.heal_swap(self.target.path(table))
-                    if self.target.exists(table):
-                        tgt = self.target.read(table)
-                    else:
-                        tgt = src.limit(0)  # first run: empty clone target
-                    if self.merge_strategy == "auto":
-                        # The footer bound caps the delta's rows, so
-                        # under the limit it decides without a count().
-                        small = last_ts is not None and (
-                            bound is not None and bound <= self.broadcast_delta_max_rows
-                            or delta.count() <= self.broadcast_delta_max_rows
-                        )
-                        strategy = "broadcast_delta" if small else "shuffle"
-                    else:
-                        strategy = self.merge_strategy
-                    merged = merge_soft_delete(tgt, delta_clean, pk, strategy=strategy)
-                    self.target.overwrite(
-                        table,
-                        merged.df,
-                        before_swap=None if commit_order is None else partial(commit_order.wait, table),
-                    )
-
-                # The write filled the merge observation. Watermark
-                # advance only after a successful write (at-least-once
-                # protocol, 03_cdc_etl.py:324-334).
-                stats = merged.stats()
-                if stats.max_change_ts is not None:
-                    self.watermarks.upsert(table, stats.max_change_ts)
-                return TableResult(
-                    table,
-                    "replicated",
-                    inserted=stats.inserted,
-                    updated=stats.updated,
-                    dropped_deletes=stats.dropped_deletes,
-                )
+                small = delta.count() <= self.broadcast_delta_max_rows if counted else bounded
+                if self.merge_strategy == "auto":
+                    # broadcast only when the delta is incremental (a
+                    # watermark exists) and small: by the footer bound,
+                    # else by the count.
+                    strategy = "broadcast_delta" if small else "shuffle"
+                else:
+                    strategy = self.merge_strategy
+                # A broadcast-sized delta dedupes in one partition,
+                # which already meets the window's clustering: no
+                # exchange, and the single task opens the files the
+                # footer gate opened this cycle.
+                one_task = strategy == "broadcast_delta" and small
+                delta_clean = latest_per_key(delta.coalesce(1) if one_task else delta, pk)
+                return self._merge(table, pk, src, delta_clean, strategy, commit_order)
             finally:
-                delta.unpersist()
+                if cached:
+                    delta.unpersist()
         except Exception as exc:  # per-table isolation (03_cdc_etl.py:348-352)
             return TableResult(table, "failed", error=f"{type(exc).__name__}: {exc}")
         finally:
@@ -293,17 +285,64 @@ class CdcPipeline:
             if commit_order is not None:
                 commit_order.release(table)
 
-    def _delta_bound(self, table: str, schema: T.StructType, last_ts) -> int | None:
-        """Upper bound on the delta's rows from the source's parquet
-        footers, 0 when no row can be newer than ``last_ts``; None when
-        only Spark can tell: no watermark, no parquet path, CDC columns
-        Spark does not read as instants, or a watermark literal that
-        would be timestamp_ntz."""
+    def _merge(
+        self, table: str, pk: list[str], src: DataFrame, delta: DataFrame, strategy: str,
+        commit_order: _CommitOrder | None,
+    ) -> TableResult:
+        """Merge ``delta`` into the target with one write, then advance
+        the watermark. The write's observation decides emptiness: a
+        delta of no row discards the staged copy before the FK wait, and
+        the table ends ``empty_delta`` with target and watermark as
+        they were."""
+        # The table lock covers the whole read→merge→swap: a concurrent
+        # writer (another replicate, a compact) cannot swap the
+        # directory between this target read and the overwrite — the
+        # lost-update / stale-file-listing window. The heal first puts
+        # back a table a killed swap left parked, so it is not taken
+        # for a first load.
+        with locking.table_write_lock(self.target.path(table)):
+            locking.heal_swap(self.target.path(table))
+            if self.target.exists(table):
+                tgt = self.target.read(table)
+            else:
+                tgt = src.limit(0)  # first run: empty clone target
+            merged = merge_soft_delete(tgt, delta, pk, strategy=strategy)
+
+            def before_swap() -> None:
+                if merged.stats().delta_rows == 0:
+                    raise _EmptyDelta
+                if commit_order is not None:
+                    commit_order.wait(table)
+
+            try:
+                self.target.overwrite(table, merged.df, before_swap=before_swap)
+            except _EmptyDelta:
+                return TableResult(table, "empty_delta")
+
+        # Watermark advance only after a successful write (at-least-once
+        # protocol, 03_cdc_etl.py:324-334).
+        stats = merged.stats()
+        if stats.max_change_ts is not None:
+            self.watermarks.upsert(table, stats.max_change_ts)
+        return TableResult(
+            table,
+            "replicated",
+            inserted=stats.inserted,
+            updated=stats.updated,
+            dropped_deletes=stats.dropped_deletes,
+        )
+
+    def _newer_rows(self, table: str, schema: T.StructType, last_ts) -> NewerRows | None:
+        """What the source's parquet footers say about the rows newer
+        than ``last_ts``: a bound (0 when there is none) and whether
+        they prove one. None when only Spark can tell: no watermark, no
+        parquet path, CDC columns Spark does not read as instants, or a
+        watermark literal that would be timestamp_ntz."""
         types = {f.name.lower(): f.dataType for f in schema.fields}
         instants = all(isinstance(types.get(c), T.TimestampType) for c in (CREATED, UPDATED))
         if last_ts is None or not instants or is_timestamp_ntz_preferred():
             return None
-        return newer_rows_bound(self.source.get_meta(table).path, last_ts, (CREATED, UPDATED))
+        return newer_rows(self.source.get_meta(table).path, last_ts, (CREATED, UPDATED))
 
     # -- full run ------------------------------------------------------
 

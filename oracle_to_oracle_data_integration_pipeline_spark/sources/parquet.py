@@ -9,8 +9,9 @@ so pushdown survives).
 
 The same footers answer metadata questions on the driver, with no
 Spark job: ``footer_schema`` is the schema ``spark.read.parquet`` would
-infer, and ``newer_rows_bound`` bounds the rows newer than a watermark
-from row-group statistics. Both read the footers fresh on every call.
+infer, and ``newer_rows`` bounds the rows newer than a watermark from
+row-group statistics and tells whether they prove at least one. Both
+read the footers fresh on every call.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import json
 import os
 import time
 from datetime import datetime
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
@@ -135,13 +137,30 @@ def _may_be_newer(chunk, num_rows: int, scale: int, since_us: int) -> bool:
     return st.max_raw * scale > since_us
 
 
-def newer_rows_bound(path: str | None, since, columns: tuple[str, ...]) -> int | None:
-    """Upper bound on the rows of the parquet table at ``path`` that
-    hold a value newer than ``since`` (strict ``>``) in any of
-    ``columns``, summed over the row groups whose statistics allow one.
-    0 proves there is no such row. None when the footers cannot bound
-    it: no path, a listing Spark may not share (``data_files``), a
-    file pyarrow cannot parse, a column missing, ambiguous or not a
+def _is_newer(chunk, scale: int, since_us: int) -> bool:
+    """The chunk's statistics name a non-null value newer than
+    ``since_us``: its max is such a value, held by some row."""
+    st = chunk.statistics
+    return st is not None and st.has_min_max and st.max_raw * scale > since_us
+
+
+class NewerRows(NamedTuple):
+    """What the footers say about the rows newer than a watermark:
+    ``bound`` caps how many there are, and ``proven`` is True when some
+    row group's statistics name a non-null ``created_at``/``updated_at``
+    max strictly after it, so at least one exists."""
+
+    bound: int
+    proven: bool
+
+
+def newer_rows(path: str | None, since, columns: tuple[str, ...]) -> NewerRows | None:
+    """Bound, and proof of, the rows of the parquet table at ``path``
+    that hold a value newer than ``since`` (strict ``>``) in any of
+    ``columns``. The bound sums the row groups whose statistics allow
+    such a row; 0 proves there is none. None when the footers cannot
+    bound it: no path, a listing Spark may not share (``data_files``),
+    a file pyarrow cannot parse, a column missing, ambiguous or not a
     UTC-adjusted micro/millisecond timestamp, or a ``since`` that is
     not a datetime. Columns match case-insensitively, as Spark resolves
     them. Reads every data file's footer on the driver, fresh on every
@@ -153,7 +172,7 @@ def newer_rows_bound(path: str | None, since, columns: tuple[str, ...]) -> int |
         return None
     since_us = _instant_us(since)
     wanted = {c.lower() for c in columns}
-    bound = 0
+    bound, proven = 0, False
     for f in files:
         try:
             md = pq.read_metadata(f)
@@ -174,7 +193,16 @@ def newer_rows_bound(path: str | None, since, columns: tuple[str, ...]) -> int |
             rg = md.row_group(r)
             if any(_may_be_newer(rg.column(i), rg.num_rows, scale, since_us) for i, scale in cols.values()):
                 bound += rg.num_rows
-    return bound
+                proven = proven or any(_is_newer(rg.column(i), scale, since_us) for i, scale in cols.values())
+    return NewerRows(bound, proven)
+
+
+def newer_rows_bound(path: str | None, since, columns: tuple[str, ...]) -> int | None:
+    """``newer_rows``' bound alone: an upper bound on the rows newer
+    than ``since``, 0 when there is none, None when the footers cannot
+    bound them."""
+    rows = newer_rows(path, since, columns)
+    return None if rows is None else rows.bound
 
 
 class ParquetSource:

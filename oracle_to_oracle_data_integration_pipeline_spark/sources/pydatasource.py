@@ -252,9 +252,11 @@ def register_sink(spark) -> None:
 
 def read_audit(spark, path: str, schema: str):
     """Read back ONLY manifest-listed files (batch + every committed
-    micro-batch manifest) — orphaned stage files are invisible."""
+    micro-batch manifest) — orphaned stage files are invisible. A sink
+    whose only write failed before any task staged a file has no
+    directory yet: it reads as empty."""
     files = []
-    for name in sorted(_os.listdir(path)):
+    for name in sorted(_os.listdir(path) if _os.path.isdir(path) else []):
         if name == "_manifest.json" or (
             name.startswith("_manifest-") and name.endswith(".json")
         ):

@@ -14,9 +14,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from oracle_to_oracle_data_integration_pipeline_spark import catalog as catalog_mod
 from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
 from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import delta_predicate
 from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
+from oracle_to_oracle_data_integration_pipeline_spark.plans import pipeline as pipeline_mod
 from oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline import (
     CdcPipeline,
     ParquetTargetStore,
@@ -303,3 +305,139 @@ def test_timestamp_ntz_literals_fall_through_to_spark(spark, tmp_path, jobs_of):
         spark.conf.unset("spark.sql.timestampType")
     assert [r.status for r in report.results] == ["empty_delta"]
     assert jobs  # Spark's isEmpty answered
+
+
+# -- proof: a footer-proven delta runs only its merge ----------------------
+
+
+def _changed_table_source(tmp_path):
+    """t1 replicated once with three rows; then one update and one
+    fresh key land, both proven newer by the footer's statistics."""
+    src = tmp_path / "src"
+    path = _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)] * 3, [None] * 3))
+    return src, path, _table([TS(2024, 1, 1)] * 3 + [TS(2024, 1, 5)], [TS(2024, 1, 5), None, None, None],
+                             ids=[1, 2, 3, 4])
+
+
+def test_newer_rows_proves_only_from_a_newer_non_null_max(tmp_path):
+    path = _write(f"{tmp_path}/t.parquet", _table([TS(2024, 1, 1), TS(2024, 1, 1)], [None, TS(2024, 1, 3)]))
+    assert pqsrc.newer_rows(path, WM, CDC) == (2, True)
+    assert pqsrc.newer_rows(path, TS(2024, 1, 3), CDC) == (0, False)
+    unproven = _write(f"{tmp_path}/u.parquet", _table([TS(2024, 1, 3)], [None]), write_statistics=False)
+    assert pqsrc.newer_rows(unproven, WM, CDC) == (1, False)
+    assert pqsrc.newer_rows(None, WM, CDC) is None
+
+
+def test_footer_proven_changed_table_runs_only_its_merge(spark, tmp_path, jobs_of):
+    """No cache, no isEmpty gate, no count: the merge's two broadcasts
+    and its write."""
+    src, path, changed = _changed_table_source(tmp_path)
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    pipe.run(parallel=False)
+    _write(path, changed)
+    res, jobs = jobs_of(lambda: pipe.replicate_table("t1"))
+    assert (res.status, res.inserted, res.updated, res.dropped_deletes) == ("replicated", 1, 1, 0)
+    names = [j["name"].split(" at ")[0] for j in jobs]
+    assert 0 < len(jobs) <= 3 and not {"isEmpty", "count"} & set(names), names
+    assert _target_ids(pipe, "t1") == [1, 2, 3, 4]
+    assert pipe.watermarks.get("t1") == TS(2024, 1, 5)
+
+
+def test_changed_table_reads_its_source_footer_schema_once(spark, tmp_path, monkeypatch):
+    """The gate's schema read serves the loader too; the next cycle
+    reads it afresh, so a long-lived catalog still sees it evolve."""
+    src, path, changed = _changed_table_source(tmp_path)
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    pipe.run()
+    reads = []
+    real = catalog_mod.footer_schema
+    monkeypatch.setattr(catalog_mod, "footer_schema", lambda spark, p: reads.append(p) or real(spark, p))
+    _write(path, changed)
+    [res] = pipe.run().results
+    assert res.status == "replicated"
+    assert [p for p in reads if p.endswith("t1.parquet")] == [path], reads
+    _write(path, _table([TS(2024, 1, 6)], [None], ids=[5]).append_column("extra", pa.array(["x"])))
+    [res] = pipe.run().results
+    assert (res.status, res.inserted) == ("replicated", 1)
+    assert "extra" in pipe.target.read("t1").columns
+
+
+def test_unproven_no_change_cycle_writes_nothing(spark, tmp_path, jobs_of):
+    """Footers without statistics prove no row: the isEmpty gate answers,
+    and no staged copy is written just to be thrown away."""
+    src = tmp_path / "src"
+    _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)] * 2, [None, None]), write_statistics=False)
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    pipe.run(parallel=False)
+    report, jobs = jobs_of(lambda: pipe.run(parallel=False))
+    assert [r.status for r in report.results] == ["empty_delta"]
+    assert jobs and sum(j["output_bytes"] for j in jobs) == 0, jobs
+
+
+def test_new_keys_with_null_is_deleted_replicate_and_advance_the_watermark(spark, tmp_path):
+    """Rows the insert gate drops and the drop count does not count
+    (u+i+x = 0) are still a non-empty delta: the watermark moves."""
+    src = tmp_path / "src"
+    path = _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)], [None]))
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    pipe.run()
+    nulls = _table([TS(2024, 1, 1), TS(2024, 1, 5), TS(2024, 1, 5)], [None] * 3)
+    _write(path, nulls.set_column(3, "is_deleted", pa.array(["N", None, None], pa.string())))
+    [res] = pipe.run().results
+    assert (res.status, res.inserted, res.updated, res.dropped_deletes) == ("replicated", 0, 0, 0)
+    assert pipe.watermarks.get("t1") == TS(2024, 1, 5)
+    assert _target_ids(pipe, "t1") == [1]
+    assert [r.status for r in pipe.run().results] == ["empty_delta"]
+
+
+def test_bound_above_the_broadcast_limit_is_counted(spark, tmp_path, monkeypatch):
+    """One 50-row row group holds the one changed row: the bound (50)
+    exceeds the limit, so auto counts the real delta (1) and still
+    broadcasts it."""
+    src = tmp_path / "src"
+    path = _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)] * 50, [None] * 50))
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    pipe.broadcast_delta_max_rows = 10
+    pipe.run()
+    _write(path, _table([TS(2024, 1, 1)] * 50, [TS(2024, 1, 5)] + [None] * 49))
+    strategies, counted = [], []
+    real = pipeline_mod.merge_soft_delete
+    monkeypatch.setattr(pipeline_mod, "merge_soft_delete",
+                        lambda *a, **kw: strategies.append(kw["strategy"]) or real(*a, **kw))
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    real_count = frame.count
+    monkeypatch.setattr(frame, "count", lambda df: counted.append(real_count(df)) or counted[-1])
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    [res] = pipe.run(parallel=False).results
+    assert (res.status, res.updated) == ("replicated", 1)
+    assert strategies == ["broadcast_delta"]
+    assert counted == [1]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached  # the delta cache is released
+
+
+def test_proof_over_an_empty_delta_leaves_the_table_and_releases_children(spark, tmp_path, monkeypatch):
+    """Footers that claim a newer row Spark then does not read (here a
+    patched proof): the write observes no delta row, so the staged copy
+    is discarded before the FK wait, and the child still replicates."""
+    src = tmp_path / "src"
+    _write(f"{src}/p.parquet", _table([TS(2024, 1, 1)] * 2, [None, None]))
+    child = _write(f"{src}/c.parquet", _table([TS(2024, 1, 1)], [None]))
+    cat = Catalog.from_parquet_dir(spark, str(src), pks={"p": ["id"], "c": ["id"]}, fk_edges=[("p", "c")])
+    pipe = CdcPipeline(spark, cat, ParquetTargetStore(spark, f"{tmp_path}/target"),
+                       WatermarkStore(spark, f"{tmp_path}/wm"), max_parallel_tables=2)
+    assert pipe.run().exit_code == 0
+
+    real = pipeline_mod.newer_rows
+    monkeypatch.setattr(pipeline_mod, "newer_rows", lambda path, since, cols: (
+        pqsrc.NewerRows(1, True) if path.endswith("p.parquet") else real(path, since, cols)))
+    _write(child, _table([TS(2024, 1, 1), TS(2024, 1, 5)], [None, None], ids=[1, 2]))
+    target = tmp_path / "target"
+    files = {f: os.stat(target / "p" / f).st_mtime_ns for f in os.listdir(target / "p")}
+    mark = pipe.watermarks.get("p")
+
+    report = pipe.run(parallel=True)
+    assert {r.table: r.status for r in report.results} == {"p": "empty_delta", "c": "replicated"}
+    assert {f: os.stat(target / "p" / f).st_mtime_ns for f in os.listdir(target / "p")} == files
+    assert [f for f in os.listdir(target) if ".tmp-" in f or ".old-" in f] == []
+    assert pipe.watermarks.get("p") == mark
+    assert _target_ids(pipe, "c") == [1, 2]

@@ -168,6 +168,63 @@ def test_merge_broadcast_delta_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoin" not in p2, "full-outer merge must not broadcast"
 
 
+def test_bounded_merge_write_plan_has_no_exchange_and_one_key_broadcast(spark, tmp_path):
+    """A footer-bounded delta is deduplicated in one partition, so the
+    merge's executed write plan (from the SQL status store) has no
+    hash exchange; the delta keys are broadcast once for the anti join
+    and reused by the semi join, beside the matched-key broadcast."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
+    from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
+    from oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline import (
+        CdcPipeline,
+        ParquetTargetStore,
+    )
+
+    ts = pa.timestamp("us", tz="UTC")
+    old, new = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 5)
+
+    def source(created, updated):
+        ids = list(range(len(created)))
+        pq.write_table(pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "val": pa.array([f"v{i}" for i in ids]),
+            "created_at": pa.array(created, ts),
+            "updated_at": pa.array(updated, ts),
+            "is_deleted": pa.array(["N"] * len(ids)),
+        }), f"{tmp_path}/src/t1.parquet")
+
+    (tmp_path / "src").mkdir()
+    source([old] * 100, [None] * 100)
+    cat = Catalog.from_parquet_dir(spark, f"{tmp_path}/src", pks={"t1": ["id"]}, fk_edges=[])
+    pipe = CdcPipeline(spark, cat, ParquetTargetStore(spark, f"{tmp_path}/target"),
+                       WatermarkStore(spark, f"{tmp_path}/wm"), max_parallel_tables=1)
+    pipe.run()
+    source([old] * 100 + [new] * 2, [new if i % 10 == 0 else None for i in range(100)] + [None] * 2)
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        listed = store.executionsList()
+        return {listed.apply(i).executionId(): listed.apply(i) for i in range(listed.size())}
+
+    seen = set(execution_ids())
+    res = pipe.replicate_table("t1")
+    assert (res.status, res.inserted, res.updated) == ("replicated", 2, 10)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    [write] = [
+        e.physicalPlanDescription() for i, e in sorted(execution_ids().items())
+        if i not in seen and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    final = write.split("== Initial Plan ==")[0]
+    assert re.findall(r"\bExchange \(\d+\)", final) == [] and "hashpartitioning" not in final, final
+    assert final.count("BroadcastExchange") == 2 and final.count("ReusedExchange") == 1, final
+
+
 def test_salted_join_scan_pruned(spark, sf_dir):
     """The salt hash must not drag unused fact columns into the scan:
     ReadSchema stays pruned to the 4 columns the query needs."""

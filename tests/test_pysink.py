@@ -109,3 +109,9 @@ def test_stream_write_per_batch_manifests(spark, tmp_path):
     got = read_audit(spark, path, schema)
     assert got.count() == 300
     assert got.select("id").distinct().count() == 30
+
+
+def test_read_audit_of_a_sink_with_no_directory_is_empty(spark, tmp_path):
+    """A failed write whose tasks all aborted before staging a file
+    leaves no sink directory: that reads as an empty sink."""
+    assert read_audit(spark, str(tmp_path / "never_written"), SCHEMA).count() == 0

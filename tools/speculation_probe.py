@@ -30,9 +30,10 @@ where an attempt race could plausibly leak:
   - pandas-UDF aggregation/window paths (scalar_pandas_udf,
     grouped_rank_pandas, pandas_grouped_agg, kmeans_assign, python_udtf)
   - the replication pipeline (``pipeline_replicate``): one changed
-    table through ``CdcPipeline.replicate_table``, whose merge counts
-    and next watermark are observed metrics — accumulator-backed, so a
-    killed attempt that double-counted would show here
+    parquet-path table through ``CdcPipeline.replicate_table`` on its
+    footer-bounded path, whose merge counts, delta row count and next
+    watermark are observed metrics — accumulator-backed, so a killed
+    attempt that double-counted would show here
 
 Protocol: two fresh-JVM cells (base, spec) hash every target qid with
 the driver-faithful canonicalization (tests/duck_compare._rowset).
@@ -200,11 +201,15 @@ class _AttemptKiller:
 def _pipeline_case(spark, sf_dir: str):
     """First load of the CDC orders as they stood at ``T0``, then one
     incremental ``replicate_table`` over their current state (updates,
-    inserts, soft-deletes, gated soft-deletes). One row: the cycle's
-    ``TableResult`` counts, the watermark it committed and a digest of
-    the target's row set."""
+    inserts, soft-deletes, gated soft-deletes). The source is a parquet
+    directory with UTC-adjusted microsecond CDC columns, so the cycle
+    takes the footer-bounded path: its merge write is its only query.
+    One row: the cycle's ``TableResult`` counts, the watermark it
+    committed and a digest of the target's row set."""
     import shutil
     import tempfile
+
+    from pyspark.sql import functions as F
 
     from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
     from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
@@ -218,14 +223,24 @@ def _pipeline_case(spark, sf_dir: str):
     )
     from tests.duck_compare import _rowset
 
+    def publish(df):
+        out = df.withColumn("created_at", F.col("created_at").cast("timestamp")) \
+                .withColumn("updated_at", F.col("updated_at").cast("timestamp"))
+        prior = spark.conf.get("spark.sql.parquet.outputTimestampType")
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        try:
+            out.write.mode("overwrite").parquet(f"{work}/src/orders")
+        finally:
+            spark.conf.set("spark.sql.parquet.outputTimestampType", prior)
+
     work = tempfile.mkdtemp(prefix="o2o_spec_pipeline_")
     try:
-        cat = Catalog(spark)
-        cat.put("orders", _target_delta(spark, sf_dir)[0], pk=["o_orderkey"])
+        publish(_target_delta(spark, sf_dir)[0])
+        cat = Catalog.from_parquet_dir(spark, f"{work}/src", pks={"orders": ["o_orderkey"]}, fk_edges=[])
         pipe = CdcPipeline(spark, cat, ParquetTargetStore(spark, f"{work}/target"),
                            WatermarkStore(spark, f"{work}/wm"), max_parallel_tables=1)
         first = pipe.replicate_table("orders")
-        cat.put("orders", cdc_orders(spark, sf_dir), pk=["o_orderkey"])
+        publish(cdc_orders(spark, sf_dir))
         res = pipe.replicate_table("orders")
         tgt = pipe.target.read("orders")
         canon = _rowset([c.lower() for c in tgt.columns], [tuple(r) for r in tgt.collect()])
