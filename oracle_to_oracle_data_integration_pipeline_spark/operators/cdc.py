@@ -227,7 +227,7 @@ def _align_schemas(target: DataFrame, delta: DataFrame) -> tuple[DataFrame, Data
             delta = delta.withColumn(name, F.lit(None).cast(t_types[lc]))
             backfilled.append(name)
     # delta projected into the (evolved) target column order
-    delta = delta.selectExpr(*map(_q, target.columns))
+    delta = delta.select(*target.columns)
     return target, delta, backfilled
 
 
@@ -280,8 +280,8 @@ def merge_attribution(target: DataFrame, delta: DataFrame, pk: list[str],
 def _tagged_join(target: DataFrame, delta: DataFrame, pk: list[str]) -> DataFrame:
     """Full-outer join on ``pk``, every column tagged ``__t_c__`` /
     ``__d_c__`` so the joined plan keeps unambiguous references."""
-    t = target.selectExpr(*[f"{_q(c)} AS {_q(f'__t_{c}__')}" for c in target.columns])
-    d = delta.selectExpr(*[f"{_q(c)} AS {_q(f'__d_{c}__')}" for c in delta.columns])
+    t = target.select([F.col(c).alias(f"__t_{c}__") for c in target.columns])
+    d = delta.select([F.col(c).alias(f"__d_{c}__") for c in delta.columns])
     cond = None
     for k in pk:
         clause = F.col(f"__t_{k}__") == F.col(f"__d_{k}__")
@@ -359,15 +359,16 @@ def merge_soft_delete(
     obs = Observation()  # below the insert gate: gated soft-deletes count
     joined = joined.observe(
         obs, *_observed(t_present, d_present, F.col(f"__d_{deleted_col}__"), change_ts))
-    t_key, d_key = _q(f"__t_{pk[0]}__"), _q(f"__d_{pk[0]}__")
-    resolved = joined.where(
-        f"{t_key} IS NOT NULL OR {_q(f'__d_{deleted_col}__')} = 'N'"  # insert gate
-    ).selectExpr(*[
-        # backfilled = column the delta doesn't stage: matched rows
-        # keep the target value (reference MERGE SET-list scope)
-        f"CASE WHEN {t_key} IS NOT NULL THEN {_q(f'__t_{c}__')} ELSE {_q(f'__d_{c}__')} END AS {_q(c)}"
-        if c in backfilled
-        else f"CASE WHEN {d_key} IS NOT NULL THEN {_q(f'__d_{c}__')} ELSE {_q(f'__t_{c}__')} END AS {_q(c)}"
-        for c in out_cols
-    ])
+    resolved = joined.filter(
+        t_present | (F.col(f"__d_{deleted_col}__") == "N")  # insert gate
+    ).select(
+        [
+            # backfilled = column the delta doesn't stage: matched rows
+            # keep the target value (reference MERGE SET-list scope)
+            F.when(t_present, F.col(f"__t_{c}__")).otherwise(F.col(f"__d_{c}__")).alias(c)
+            if c in backfilled
+            else F.when(d_present, F.col(f"__d_{c}__")).otherwise(F.col(f"__t_{c}__")).alias(c)
+            for c in out_cols
+        ]
+    )
     return MergeResult(df=resolved, observation=obs)

@@ -50,7 +50,12 @@ changes bound the delta, so a bound under ``broadcast_delta_max_rows``
 picks the broadcast merge without a ``count()``; when a row group's
 statistics also prove a newer row, the merge's write is the table's
 only query (3 jobs: two broadcasts and the write) and the delta is
-neither cached nor gated. The gate reads one
+neither cached nor gated. That write scans the delta's source files
+twice, once for the key broadcast and once for the delta rows, so a
+source must publish changes as new files and never rewrite a file in
+place during a cycle: a rewrite between the two scans could drop a
+target row the new rows no longer carry, or insert a key twice. The
+gate reads one
 footer per data file per cycle, fresh each time; at millions of files
 per-file statistics belong in a manifest written with the data, not in
 a listing plus a footer read per file. Target storage here is plain
@@ -267,11 +272,11 @@ class CdcPipeline:
                     strategy = "broadcast_delta" if small else "shuffle"
                 else:
                     strategy = self.merge_strategy
-                # A broadcast-sized delta dedupes in one partition,
-                # which already meets the window's clustering: no
-                # exchange, and the single task opens the files the
-                # footer gate opened this cycle.
-                one_task = strategy == "broadcast_delta" and small
+                # A broadcast delta the footers bound dedupes in one
+                # partition, which already meets the window's
+                # clustering: no exchange, and the single task opens
+                # the files the footer gate opened this cycle.
+                one_task = strategy == "broadcast_delta" and bounded
                 delta_clean = latest_per_key(delta.coalesce(1) if one_task else delta, pk)
                 return self._merge(table, pk, src, delta_clean, strategy, commit_order)
             finally:

@@ -206,6 +206,9 @@ def _discard(path: str, messages) -> None:
 class AuditSinkWriter(DataSourceWriter):
     def __init__(self, options):
         self.path = options["path"]
+        # The sink exists once a write starts, even one whose tasks
+        # all fail before staging a file: it then reads as empty.
+        _os.makedirs(self.path, exist_ok=True)
 
     def write(self, iterator) -> _FileCommit:
         return _stage_partition(self.path, iterator)
@@ -252,11 +255,9 @@ def register_sink(spark) -> None:
 
 def read_audit(spark, path: str, schema: str):
     """Read back ONLY manifest-listed files (batch + every committed
-    micro-batch manifest) — orphaned stage files are invisible. A sink
-    whose only write failed before any task staged a file has no
-    directory yet: it reads as empty."""
+    micro-batch manifest) — orphaned stage files are invisible."""
     files = []
-    for name in sorted(_os.listdir(path) if _os.path.isdir(path) else []):
+    for name in sorted(_os.listdir(path)):
         if name == "_manifest.json" or (
             name.startswith("_manifest-") and name.endswith(".json")
         ):

@@ -111,7 +111,16 @@ def test_stream_write_per_batch_manifests(spark, tmp_path):
     assert got.select("id").distinct().count() == 30
 
 
-def test_read_audit_of_a_sink_with_no_directory_is_empty(spark, tmp_path):
-    """A failed write whose tasks all aborted before staging a file
-    leaves no sink directory: that reads as an empty sink."""
-    assert read_audit(spark, str(tmp_path / "never_written"), SCHEMA).count() == 0
+def test_a_started_write_creates_the_sink_and_a_wrong_path_raises(spark, tmp_path):
+    """The batch writer creates the sink directory when the write
+    starts, so a write whose tasks all fail before staging a file
+    still leaves an empty sink; a path nothing wrote to still raises."""
+    import pytest
+
+    from oracle_to_oracle_data_integration_pipeline_spark.sources.pydatasource import AuditSinkWriter
+
+    path = str(tmp_path / "sink")
+    AuditSinkWriter({"path": path})
+    assert read_audit(spark, path, SCHEMA).count() == 0
+    with pytest.raises(FileNotFoundError):
+        read_audit(spark, str(tmp_path / "never_written"), SCHEMA)
