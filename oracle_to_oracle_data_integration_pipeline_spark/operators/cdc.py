@@ -54,8 +54,7 @@ def change_ts_col(created: str = CREATED, updated: str = UPDATED) -> Column:
     return F.greatest(F.coalesce(F.col(updated), F.col(created)), F.col(created))
 
 
-def delta_predicate(last_ts, created: str = CREATED, updated: str = UPDATED,
-                    inclusive: bool = False) -> Column | None:
+def delta_predicate(last_ts, created: str = CREATED, updated: str = UPDATED) -> Column | None:
     """Pushdown-safe incremental predicate.
 
     ``change_ts > last_ts`` is equivalent to
@@ -69,21 +68,14 @@ def delta_predicate(last_ts, created: str = CREATED, updated: str = UPDATED,
     ``None`` (no watermark yet) means full load — first-run semantics
     per `/root/reference/scripts/03_cdc_etl.py:291-294`.
 
-    Boundary semantics: the default strict ``>`` matches the reference
-    exactly — which means a row that becomes VISIBLE late with
-    ``change_ts`` equal to the committed watermark is never re-read
-    (at-most-once at the boundary; the reference shares this hazard).
-    ``inclusive=True`` uses ``>=`` so equal-timestamp late arrivals
-    replay on the next run and the idempotent merge absorbs them —
-    at the cost of re-reading the boundary rows every run (and the
-    empty-delta short-circuit never firing while rows sit exactly at
-    the watermark).
+    Boundary semantics: the strict ``>`` matches the reference exactly
+    — which means a row that becomes VISIBLE late with ``change_ts``
+    equal to the committed watermark is never re-read (at-most-once at
+    the boundary; the reference shares this hazard).
     """
     if last_ts is None:
         return None
     ts = F.lit(last_ts)
-    if inclusive:
-        return (F.col(created) >= ts) | (F.col(updated) >= ts)
     return (F.col(created) > ts) | (F.col(updated) > ts)
 
 
@@ -240,7 +232,8 @@ def _merge_broadcast_delta(
     # target-side passes: broadcast the (small) delta keys. The explicit
     # non-null filter (a null key matches nothing) makes the anti and
     # semi joins plan the same broadcast, so Spark builds it once over
-    # an uncached delta; over a cached one it still builds it twice.
+    # an uncached delta; over a cached one (the pipeline's counted
+    # delta) AQE plans two cache stages and builds it twice.
     keys = delta.selectExpr(*map(_q, pk)).where(" AND ".join(f"{_q(k)} IS NOT NULL" for k in pk))
     untouched = target.join(F.broadcast(keys), pk, "left_anti").selectExpr(*map(_q, out_cols))
     # matched keys also carry the target's values for columns the delta
@@ -325,10 +318,11 @@ def merge_soft_delete(
       Cost: 2 target scans, 0 target shuffles vs 1 scan + 1 full
       shuffle — scans are far cheaper than a cluster-wide shuffle of
       the same bytes — and 2 broadcasts: the delta keys, built once
-      and reused by the anti and semi joins (unless the delta is
-      cached), and the matched-key set. So 3 jobs with the write. A
-      delta deduplicated in one partition (``latest_per_key`` over
-      ``coalesce(1)``) adds no exchange either.
+      and reused by the anti and semi joins, and the matched-key set.
+      So 3 jobs with the write. A delta deduplicated in one partition
+      (``latest_per_key`` over ``coalesce(1)``) adds no exchange
+      either. A cached delta (the pipeline caches one it counts) gets
+      no reuse: its key broadcast is built twice.
 
     ``dedup_delta=True`` collapses multi-change batches via
     ``latest_per_key`` first. Column order of the output = target

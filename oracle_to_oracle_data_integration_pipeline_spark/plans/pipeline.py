@@ -14,10 +14,11 @@ count() to gate empty delta                 → the source's parquet footers
                                               on the driver (no Spark job):
                                               no row group newer than the
                                               watermark → empty_delta; a
-                                              row group whose max is newer
-                                              proves a row → no gate job;
-                                              else isEmpty() on the cached
-                                              delta
+                                              proven row and a bound under
+                                              the broadcast limit → no gate
+                                              job; else one count() of the
+                                              cached, deduplicated delta
+                                              (a first load runs none)
 stage to STG_ table + Oracle MERGE          → merge_soft_delete (one
                                               shuffle join, or broadcast
                                               joins for a small delta; no
@@ -46,16 +47,19 @@ footers (``sources.parquet.footer_schema``), and a table whose every
 row group's ``created_at``/``updated_at`` max is at or below the
 watermark ends ``empty_delta`` from its footers alone
 (``newer_rows``). The rows of the row groups that may hold newer
-changes bound the delta, so a bound under ``broadcast_delta_max_rows``
-picks the broadcast merge without a ``count()``; when a row group's
-statistics also prove a newer row, the merge's write is the table's
-only query (3 jobs: two broadcasts and the write) and the delta is
-neither cached nor gated. That write scans the delta's source files
-twice, once for the key broadcast and once for the delta rows, so a
-source must publish changes as new files and never rewrite a file in
-place during a cycle: a rewrite between the two scans could drop a
-target row the new rows no longer carry, or insert a key twice. The
-gate reads one
+changes bound the delta. Spark counts a delta beforehand only where an
+empty one would rewrite a replicated target and the footers do not
+both prove a row and bound it under ``BROADCAST_DELTA_MAX_ROWS``: a
+first load and a proven, bounded delta run the merge's write as the
+table's only query (3 jobs for the bounded one: two broadcasts and the
+write), uncached, and the write's observed row count ends an empty
+one. Every other incremental delta is deduplicated, cached once and
+counted once; the count picks the merge. The bounded write scans the
+delta's source files twice, once for the key broadcast and once for
+the delta rows, so a source must publish changes as new files and
+never rewrite a file in place during a cycle: a rewrite between the
+two scans could drop a target row the new rows no longer carry, or
+insert a key twice. The gate reads one
 footer per data file per cycle, fresh each time; at millions of files
 per-file statistics belong in a manifest written with the data, not in
 a listing plus a footer read per file. Target storage here is plain
@@ -82,6 +86,7 @@ from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog
 from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import (
     CREATED,
     UPDATED,
+    MergeResult,
     delta_predicate,
     latest_per_key,
     merge_soft_delete,
@@ -91,6 +96,13 @@ from oracle_to_oracle_data_integration_pipeline_spark.plans.schema_tools import 
 from oracle_to_oracle_data_integration_pipeline_spark.plans.topo import topo_depths, topo_sort_tables
 from oracle_to_oracle_data_integration_pipeline_spark.sources import locking
 from oracle_to_oracle_data_integration_pipeline_spark.sources.parquet import NewerRows, footer_schema, newer_rows
+
+# The largest delta merged with broadcast_delta, by footer bound or by
+# count; a first load always shuffles. The explicit broadcast hint
+# overrides Spark's size safeguards, so a bulk backfill with a
+# watermark present must still take the shuffle path (see
+# operators/cdc.py merge_soft_delete).
+BROADCAST_DELTA_MAX_ROWS = 1_000_000
 
 
 @dataclass
@@ -140,11 +152,11 @@ class RunReport:
 class ParquetTargetStore:
     """Per-table parquet target, replaced whole on each merge by
     ``sources.locking.swap_dir``: the stage-and-swap shared with
-    ``ParquetSink.compact``, under the table's write lock (which
-    ``CdcPipeline.replicate_table`` holds across its whole
-    read→merge→swap; it is thread-reentrant, so the swap's own
-    acquisition nests freely). Readers are not locked: between the
-    swap's two renames the path is briefly missing (ENOENT) — retry.
+    ``ParquetSink.compact``. ``merge`` holds the table's write lock
+    across its whole read→merge→swap (the lock is thread-reentrant, so
+    the swap's own acquisition nests freely). Readers are not locked:
+    between the swap's two renames the path is briefly missing (ENOENT)
+    — retry.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -172,6 +184,39 @@ class ParquetTargetStore:
         before the swap removes the staged copy and leaves the previous
         version in place."""
         locking.swap_dir(self.path(table), df.write.mode("overwrite").parquet, before_swap)
+
+    def merge(
+        self, table: str, delta: DataFrame, pk: list[str], strategy: str = "shuffle",
+        before_swap: Callable[[], None] | None = None,
+    ) -> MergeResult | None:
+        """Merge ``delta`` (at most one row per key) into the table with
+        one write, then swap it in. The write's observation decides
+        emptiness: a delta of no row discards the staged copy before
+        ``before_swap`` and returns None, the table as it was.
+
+        The table lock covers the whole read→merge→swap: a concurrent
+        writer (another merge, a compact) cannot swap the directory
+        between this target read and the overwrite — the lost-update /
+        stale-file-listing window. The heal first puts back a table a
+        killed swap left parked, so it is not taken for a first load.
+        """
+        path = self.path(table)
+        with locking.table_write_lock(path):
+            locking.heal_swap(path)
+            tgt = self.read(table) if self.exists(table) else delta.limit(0)  # first load
+            merged = merge_soft_delete(tgt, delta, pk, strategy=strategy)
+
+            def checked_swap() -> None:
+                if merged.stats().delta_rows == 0:
+                    raise _EmptyDelta
+                if before_swap is not None:
+                    before_swap()
+
+            try:
+                self.overwrite(table, merged.df, before_swap=checked_swap)
+            except _EmptyDelta:
+                return None
+        return merged
 
 
 class _EmptyDelta(Exception):
@@ -209,21 +254,12 @@ class CdcPipeline:
         target: ParquetTargetStore,
         watermarks: WatermarkStore,
         max_parallel_tables: int = 4,
-        merge_strategy: str = "auto",
-        broadcast_delta_max_rows: int = 1_000_000,
     ):
         self.spark = spark
         self.source = source
         self.target = target
         self.watermarks = watermarks
         self.max_parallel_tables = max_parallel_tables
-        # "auto": broadcast_delta only when the delta is BOTH
-        # incremental (a watermark exists) AND actually small — the
-        # explicit broadcast hint overrides Spark's size safeguards, so
-        # a bulk backfill with a watermark present must still take the
-        # shuffle path (see operators/cdc.py merge_soft_delete).
-        self.merge_strategy = merge_strategy
-        self.broadcast_delta_max_rows = broadcast_delta_max_rows
         self._commit_order: _CommitOrder | None = None  # set during a parallel run
 
     # -- per-table replication (reference loop body,
@@ -242,46 +278,35 @@ class CdcPipeline:
 
             last_ts = self.watermarks.get(table)
             # The footers may prove the delta empty, at no Spark job, or
-            # prove a row newer than the watermark and bound the delta;
-            # what they cannot tell, Spark checks below.
+            # prove a row newer than the watermark and bound the delta.
             rows = self._newer_rows(table, schema, last_ts)
             if rows is not None and rows.bound == 0:
                 return TableResult(table, "empty_delta")
 
             src = self.source.load(table, schema=schema)
-            pred = delta_predicate(last_ts)
-            delta = src.filter(pred) if pred is not None else src
-            bounded = rows is not None and rows.bound <= self.broadcast_delta_max_rows
-            gated = rows is None or not rows.proven
-            counted = self.merge_strategy == "auto" and last_ts is not None and not bounded
-            # Cache only when a second action reads the delta: the
-            # isEmpty gate of an unproven delta, or auto's count of one
-            # the footers do not bound under the broadcast limit.
-            # Otherwise the merge's write is the only query.
-            cached = gated or counted
-            if cached:
-                delta = delta.cache()
-            try:
-                if gated and delta.isEmpty():  # cheap gate, not a full count()
-                    return TableResult(table, "empty_delta")
-                small = delta.count() <= self.broadcast_delta_max_rows if counted else bounded
-                if self.merge_strategy == "auto":
-                    # broadcast only when the delta is incremental (a
-                    # watermark exists) and small: by the footer bound,
-                    # else by the count.
-                    strategy = "broadcast_delta" if small else "shuffle"
-                else:
-                    strategy = self.merge_strategy
-                # A broadcast delta the footers bound dedupes in one
-                # partition, which already meets the window's
-                # clustering: no exchange, and the single task opens
+            if last_ts is None:
+                # A first load shuffles the whole source, uncounted: an
+                # empty one ends at the write, which discards its copy.
+                return self._merge(table, pk, latest_per_key(src, pk), "shuffle", commit_order)
+            delta = src.filter(delta_predicate(last_ts))
+            if rows is not None and rows.proven and rows.bound <= BROADCAST_DELTA_MAX_ROWS:
+                # Small and holding a row: the merge's write is the only
+                # query. One partition already meets the dedupe window's
+                # clustering, so no exchange, and the single task opens
                 # the files the footer gate opened this cycle.
-                one_task = strategy == "broadcast_delta" and bounded
-                delta_clean = latest_per_key(delta.coalesce(1) if one_task else delta, pk)
-                return self._merge(table, pk, src, delta_clean, strategy, commit_order)
+                return self._merge(
+                    table, pk, latest_per_key(delta.coalesce(1), pk), "broadcast_delta", commit_order)
+            # The footers do not show the delta both non-empty and
+            # small: count it once, over a cache the merge then reads.
+            delta = latest_per_key(delta, pk).cache()
+            try:
+                n = delta.count()
+                if n == 0:
+                    return TableResult(table, "empty_delta")
+                strategy = "broadcast_delta" if n <= BROADCAST_DELTA_MAX_ROWS else "shuffle"
+                return self._merge(table, pk, delta, strategy, commit_order)
             finally:
-                if cached:
-                    delta.unpersist()
+                delta.unpersist()
         except Exception as exc:  # per-table isolation (03_cdc_etl.py:348-352)
             return TableResult(table, "failed", error=f"{type(exc).__name__}: {exc}")
         finally:
@@ -291,39 +316,16 @@ class CdcPipeline:
                 commit_order.release(table)
 
     def _merge(
-        self, table: str, pk: list[str], src: DataFrame, delta: DataFrame, strategy: str,
+        self, table: str, pk: list[str], delta: DataFrame, strategy: str,
         commit_order: _CommitOrder | None,
     ) -> TableResult:
-        """Merge ``delta`` into the target with one write, then advance
-        the watermark. The write's observation decides emptiness: a
-        delta of no row discards the staged copy before the FK wait, and
-        the table ends ``empty_delta`` with target and watermark as
-        they were."""
-        # The table lock covers the whole read→merge→swap: a concurrent
-        # writer (another replicate, a compact) cannot swap the
-        # directory between this target read and the overwrite — the
-        # lost-update / stale-file-listing window. The heal first puts
-        # back a table a killed swap left parked, so it is not taken
-        # for a first load.
-        with locking.table_write_lock(self.target.path(table)):
-            locking.heal_swap(self.target.path(table))
-            if self.target.exists(table):
-                tgt = self.target.read(table)
-            else:
-                tgt = src.limit(0)  # first run: empty clone target
-            merged = merge_soft_delete(tgt, delta, pk, strategy=strategy)
-
-            def before_swap() -> None:
-                if merged.stats().delta_rows == 0:
-                    raise _EmptyDelta
-                if commit_order is not None:
-                    commit_order.wait(table)
-
-            try:
-                self.target.overwrite(table, merged.df, before_swap=before_swap)
-            except _EmptyDelta:
-                return TableResult(table, "empty_delta")
-
+        """Merge ``delta`` into the target, after the FK wait, then
+        advance the watermark; ``empty_delta`` when the write saw no
+        delta row."""
+        wait = None if commit_order is None else (lambda: commit_order.wait(table))
+        merged = self.target.merge(table, delta, pk, strategy, before_swap=wait)
+        if merged is None:
+            return TableResult(table, "empty_delta")
         # Watermark advance only after a successful write (at-least-once
         # protocol, 03_cdc_etl.py:324-334).
         stats = merged.stats()

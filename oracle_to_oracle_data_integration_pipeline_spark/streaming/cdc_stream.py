@@ -16,12 +16,13 @@ both execution modes. ``availableNow`` trigger drains what exists and
 stops (the testable mode); continuous deployment drops the trigger.
 
 Scale: the file source lists incrementally (maxFilesPerTrigger bounds
-batch size); each micro-batch merge is one shuffle keyed by PK. Each
-batch replaces the target through ``ParquetTargetStore.overwrite`` —
-the one stage-and-swap (``sources.locking.swap_dir``), whose heal puts
-back a table a killed swap left parked; a crash between write and
-checkpoint commit replays the batch, which the idempotent merge
-absorbs (same at-least-once + idempotency contract as the reference,
+batch size); each micro-batch merge is one shuffle keyed by PK. A
+non-empty batch goes through ``ParquetTargetStore.merge`` — the one
+locked heal→read→merge→stage-and-swap the batch pipeline also uses
+(``sources.locking.swap_dir``); an empty one is skipped, so it never
+rewrites the target. A crash between write and checkpoint commit
+replays the batch, which the idempotent merge absorbs (same
+at-least-once + idempotency contract as the reference,
 `/root/reference/README.md:287`).
 """
 
@@ -29,9 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import latest_per_key, merge_soft_delete
+from oracle_to_oracle_data_integration_pipeline_spark.operators.cdc import latest_per_key
 from oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline import ParquetTargetStore
-from oracle_to_oracle_data_integration_pipeline_spark.sources import locking
 
 
 def run_cdc_stream(
@@ -60,14 +60,7 @@ def run_cdc_stream(
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        delta = latest_per_key(batch_df, pk)
-        # same critical section as CdcPipeline.replicate_table: the
-        # target read and the swap under one lock, after the heal
-        with locking.table_write_lock(target.path(table)):
-            locking.heal_swap(target.path(table))
-            tgt = target.read(table) if target.exists(table) else batch_df.limit(0)
-            merged = merge_soft_delete(tgt, delta, pk)
-            target.overwrite(table, merged.df)
+        target.merge(table, latest_per_key(batch_df, pk), pk)
 
     writer = (
         stream.writeStream.foreachBatch(merge_batch)

@@ -304,7 +304,7 @@ def test_timestamp_ntz_literals_fall_through_to_spark(spark, tmp_path, jobs_of):
     finally:
         spark.conf.unset("spark.sql.timestampType")
     assert [r.status for r in report.results] == ["empty_delta"]
-    assert jobs  # Spark's isEmpty answered
+    assert jobs  # Spark's count answered
 
 
 # -- proof: a footer-proven delta runs only its merge ----------------------
@@ -343,6 +343,39 @@ def test_footer_proven_changed_table_runs_only_its_merge(spark, tmp_path, jobs_o
     assert pipe.watermarks.get("t1") == TS(2024, 1, 5)
 
 
+def _action_names(jobs):
+    return [j["name"].split(" at ")[0] for j in jobs]
+
+
+def test_first_load_runs_no_gate_job_and_caches_nothing(spark, tmp_path, jobs_of):
+    """A first load has no watermark to gate on: the merge's write
+    observes the row count, so nothing is cached and no isEmpty runs."""
+    src, _, _ = _changed_table_source(tmp_path)
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    report, jobs = jobs_of(lambda: pipe.run(parallel=False))
+    assert [r.status for r in report.results] == ["replicated"]
+    assert "isEmpty" not in _action_names(jobs), _action_names(jobs)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    assert _target_ids(pipe, "t1") == [1, 2, 3]
+
+
+def test_changed_table_without_statistics_is_counted_once(spark, tmp_path, jobs_of):
+    """Footers without statistics bound the delta but prove no row:
+    one count of the cached delta gates it and picks the merge."""
+    src = tmp_path / "src"
+    path = _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)] * 2, [None, None]), write_statistics=False)
+    cat, pipe = _pipeline(spark, tmp_path, src)
+    pipe.run(parallel=False)
+    _write(path, _table([TS(2024, 1, 1)] * 3, [TS(2024, 1, 5), None, TS(2024, 1, 5)], ids=[1, 2, 3]),
+           write_statistics=False)
+    res, jobs = jobs_of(lambda: pipe.replicate_table("t1"))
+    assert (res.status, res.inserted, res.updated) == ("replicated", 1, 1)
+    names = _action_names(jobs)
+    assert names.count("count") == 1 and "isEmpty" not in names, names
+    assert _target_ids(pipe, "t1") == [1, 2, 3]
+
+
 def test_changed_table_reads_its_source_footer_schema_once(spark, tmp_path, monkeypatch):
     """The gate's schema read serves the loader too; the next cycle
     reads it afresh, so a long-lived catalog still sees it evolve."""
@@ -363,8 +396,8 @@ def test_changed_table_reads_its_source_footer_schema_once(spark, tmp_path, monk
 
 
 def test_unproven_no_change_cycle_writes_nothing(spark, tmp_path, jobs_of):
-    """Footers without statistics prove no row: the isEmpty gate answers,
-    and no staged copy is written just to be thrown away."""
+    """Footers without statistics prove no row: the delta's one count
+    answers, and no staged copy is written just to be thrown away."""
     src = tmp_path / "src"
     _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)] * 2, [None, None]), write_statistics=False)
     cat, pipe = _pipeline(spark, tmp_path, src)
@@ -397,7 +430,7 @@ def test_bound_above_the_broadcast_limit_is_counted(spark, tmp_path, monkeypatch
     src = tmp_path / "src"
     path = _write(f"{src}/t1.parquet", _table([TS(2024, 1, 1)] * 50, [None] * 50))
     cat, pipe = _pipeline(spark, tmp_path, src)
-    pipe.broadcast_delta_max_rows = 10
+    monkeypatch.setattr(pipeline_mod, "BROADCAST_DELTA_MAX_ROWS", 10)
     pipe.run()
     _write(path, _table([TS(2024, 1, 1)] * 50, [TS(2024, 1, 5)] + [None] * 49))
     strategies, counted = [], []

@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from oracle_to_oracle_data_integration_pipeline_spark.catalog import Catalog, TableMeta
 from oracle_to_oracle_data_integration_pipeline_spark.operators.watermark import WatermarkStore
+from oracle_to_oracle_data_integration_pipeline_spark.plans import pipeline
 from oracle_to_oracle_data_integration_pipeline_spark.plans.pipeline import (
     CdcPipeline,
     ParquetTargetStore,
@@ -34,12 +35,12 @@ SCHEMA = T.StructType(
 )
 
 
-def build(spark, tmp, rows, table="t1", pk=("id",), strategy="auto"):
+def build(spark, tmp, rows, table="t1", pk=("id",)):
     cat = Catalog(spark)
     cat.put(table, spark.createDataFrame(rows, SCHEMA), pk=list(pk))
     target = ParquetTargetStore(spark, f"{tmp}/target")
     wm = WatermarkStore(spark, f"{tmp}/wm")
-    return cat, CdcPipeline(spark, cat, target, wm, max_parallel_tables=1, merge_strategy=strategy)
+    return cat, CdcPipeline(spark, cat, target, wm, max_parallel_tables=1)
 
 
 def target_map(pipe, table="t1"):
@@ -170,12 +171,51 @@ def test_changed_table_runs_no_collect_job(spark, tmp_path, jobs_of):
     assert [j["name"] for j in jobs if j["name"].startswith("collect")] == []
 
 
+def test_catalog_delta_is_counted_once(spark, tmp_path, jobs_of):
+    """An in-memory source has no footers: one count of the cached,
+    deduplicated delta gates it and picks the merge; no isEmpty."""
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N"), (2, "b", T1, None, "N")])
+    pipe.run()
+    cat.put("t1", spark.createDataFrame([(1, "a2", T1, T2, "N"), (3, "c", T2, None, "N")], SCHEMA), pk=["id"])
+    res, jobs = jobs_of(lambda: pipe.replicate_table("t1"))
+    assert (res.status, res.inserted, res.updated) == ("replicated", 1, 1)
+    names = [j["name"].split(" at ")[0] for j in jobs]
+    assert names.count("count") == 1 and "isEmpty" not in names, names
+
+
+def test_first_load_of_an_empty_table_leaves_no_trace(spark, tmp_path):
+    cat, pipe = build(spark, tmp_path, [])
+    [res] = pipe.run().results
+    assert res.status == "empty_delta"
+    assert not pipe.target.exists("t1")
+    assert [f for f in os.listdir(f"{tmp_path}/target") if ".tmp-" in f or ".old-" in f] == []
+    assert pipe.watermarks.get("t1") is None
+
+
+def test_lost_watermark_over_an_empty_source_keeps_the_target(spark, tmp_path):
+    """With the watermark gone the run is a first load again; an empty
+    source then must not replace the replicated target."""
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")])
+    pipe.run()
+    table_dir = f"{tmp_path}/target/t1"
+    files = {f: os.stat(f"{table_dir}/{f}").st_mtime_ns for f in os.listdir(table_dir)}
+    cat.put("t1", spark.createDataFrame([], SCHEMA), pk=["id"])
+    lost = CdcPipeline(spark, cat, pipe.target, WatermarkStore(spark, f"{tmp_path}/wm2"), max_parallel_tables=1)
+    [res] = lost.run().results
+    assert res.status == "empty_delta"
+    assert {f: os.stat(f"{table_dir}/{f}").st_mtime_ns for f in os.listdir(table_dir)} == files
+    assert [f for f in os.listdir(f"{tmp_path}/target") if ".tmp-" in f or ".old-" in f] == []
+    assert target_map(pipe) == {1: ("a", "N")}
+
+
 @pytest.mark.parametrize("strategy", ["shuffle", "broadcast_delta"])
-def test_gated_soft_delete_still_advances_watermark(spark, tmp_path, strategy):
+def test_gated_soft_delete_still_advances_watermark(spark, tmp_path, strategy, monkeypatch):
     """The batch's newest change is a soft-delete of a key the target
     never saw: the insert gate drops the row, but its change time is
     observed below the gate, so the watermark moves past it."""
-    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")], strategy=strategy)
+    if strategy == "shuffle":  # a counted delta above the limit shuffles
+        monkeypatch.setattr(pipeline, "BROADCAST_DELTA_MAX_ROWS", 0)
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")])
     pipe.run()
     cat.put("t1", spark.createDataFrame([(1, "a", T1, None, "N"), (5, "gone", T2, T3, "Y")], SCHEMA), pk=["id"])
     [res] = pipe.run().results
@@ -187,10 +227,12 @@ def test_gated_soft_delete_still_advances_watermark(spark, tmp_path, strategy):
 
 
 @pytest.mark.parametrize("strategy", ["shuffle", "broadcast_delta"])
-def test_several_versions_of_a_key_in_one_batch(spark, tmp_path, strategy):
+def test_several_versions_of_a_key_in_one_batch(spark, tmp_path, strategy, monkeypatch):
     """A change log with two versions of an existing key and two of a
     new one: the newest version of each lands, each key counts once."""
-    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")], strategy=strategy)
+    if strategy == "shuffle":  # a counted delta above the limit shuffles
+        monkeypatch.setattr(pipeline, "BROADCAST_DELTA_MAX_ROWS", 0)
+    cat, pipe = build(spark, tmp_path, [(1, "a", T1, None, "N")])
     pipe.run()
     log = [
         (1, "a", T1, None, "N"),
